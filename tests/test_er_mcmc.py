@@ -706,3 +706,170 @@ def test_sampler_multisweep_ignored_on_local_path_warns(
         st = sample(st, sample_size=1, options=opts)
     again = [r.message for r in caplog.records if "multisweep" in r.message]
     assert again == [], again
+
+
+# ---------------------------------------------------------------------------
+# Behaviour pins: seeded multi-partition chains, end to end
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def pin_corpus(spark):
+    return _pin_corpus(spark)
+
+
+def _pin_corpus(spark):
+    """RLdata-shape corpus (Levenshtein names, constant dates, Beta(10,
+    1000) priors) that runs in seconds on every execution path."""
+    from pyspark.sql import functions as F
+
+    from dblink_spark.er.analysis import membership_to_clusters
+
+    pdf = make_rldata(n_records=400, dup_fraction=0.1, missing_fraction=0.02, seed=11)
+    records = spark.createDataFrame(pdf).withColumn("file_id", F.lit("0"))
+    prior = BetaParams(10.0, 1000.0)
+    attrs = [
+        Attribute("fname", LevenshteinSim(7.0, 10.0), prior),
+        Attribute("lname", LevenshteinSim(7.0, 10.0), prior),
+        Attribute("by", ConstantSim(), prior),
+        Attribute("bm", ConstantSim(), prior),
+        Attribute("bd", ConstantSim(), prior),
+    ]
+    cache = build_records_cache(records, attrs, expected_max_cluster_size=10)
+    truth = membership_to_clusters(
+        spark.createDataFrame(pdf[["rec_id", "ent_id"]])
+    ).localCheckpoint(eager=True)
+    return records, cache, truth
+
+
+#: (precision, recall, F1, ARI, final summary log-likelihood, final
+#: isolates) of a seeded 2-partition chain per execution route, captured
+#: before the transition entry points were folded into one core. Exact:
+#: every route is deterministic given the seed.
+CHAIN_PINS = {
+    "driver_local": (
+        1.0, 0.225, 0.36734693877551017, 0.36723042450658394,
+        -6712.373779026693, 9,
+    ),
+    "distributed_k1": (
+        1.0, 0.225, 0.36734693877551017, 0.36723042450658394,
+        -6712.373779026693, 9,
+    ),
+    "distributed_burnin_k4": (
+        1.0, 0.175, 0.2978723404255319, 0.29776749048010154,
+        -6710.646811601452, 8,
+    ),
+}
+CHAIN_OPTIONS = {
+    "driver_local": {},
+    "distributed_k1": {"local_exec_max_records": 0},
+    "distributed_burnin_k4": {"local_exec_max_records": 0, "multisweep_burnin_k": 4},
+}
+
+
+def _pinned_chain(spark, pin_corpus, out, route):
+    from dblink_spark.er.chain import most_probable_clusters, shared_most_probable_clusters
+    from dblink_spark.er.metrics import evaluate_clustering, evaluate_pairwise
+    from dblink_spark.sources.chain import read_linkage_chain
+
+    records, cache, truth = pin_corpus
+    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=2024)
+    part = KDTreePartitioner(num_levels=1, attribute_ids=[0, 1])
+    part.fit(s0.df.filter("NOT is_summary").select("ent_values"))
+    st = sample(
+        assign_partitions(s0, part, 2),
+        sample_size=5,
+        options=SamplerOptions(
+            sampler="PCG-I", burnin_interval=8, thinning_interval=2,
+            **CHAIN_OPTIONS[route],
+        ),
+        output_path=out,
+    )
+    assert st.iteration == 18
+    smpc = shared_most_probable_clusters(
+        most_probable_clusters(read_linkage_chain(spark, out))
+    )
+    m = evaluate_pairwise(smpc, truth)
+    return (
+        m.precision, m.recall, m.f1, evaluate_clustering(smpc, truth),
+        st.summary.log_likelihood, st.summary.num_isolates,
+    )
+
+
+@pytest.mark.parametrize("route", sorted(CHAIN_PINS))
+def test_multi_partition_chain_pins(spark, pin_corpus, tmp_path, route):
+    """The whole sampler, not one kernel: a seeded 2-partition chain on
+    each execution route reaches exactly its pinned quality and final
+    summary."""
+    got = _pinned_chain(spark, pin_corpus, str(tmp_path / route), route)
+    assert got == CHAIN_PINS[route], got
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs per transition
+# ---------------------------------------------------------------------------
+
+
+def _jobs_in(spark, fn):
+    """Run ``fn`` inside a fresh job group; return (result, jobs launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_transition_job_counts(spark, rl_setup):
+    """Spark jobs one step launches, pinned per executor path in steady
+    block format: two (AQE's shuffle-map job for the kernel groupBy, then
+    the summary collect that materializes the lazy checkpoint). The
+    driver-local steps launch none once the chain holds ``local_parts``."""
+    from dblink_spark.er.state import (
+        transition_fused, transition_local, transition_multisweep,
+    )
+
+    records, attrs, cache, pdf = rl_setup
+
+    def two_part(seed):
+        st = init_state(spark, records, cache, SinglePartition(), 1, seed=seed)
+        part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
+        part.fit(st.df.filter("NOT is_summary").select("ent_values"))
+        return assign_partitions(st, part, 2)
+
+    jobs = {}
+    s = transition(two_part(51), "PCG-I")  # enter block format
+    assert s.block_df is not None
+    s, jobs["transition"] = _jobs_in(spark, lambda: transition(s, "PCG-I"))
+    s, jobs["multisweep_k3"] = _jobs_in(
+        spark, lambda: transition_multisweep(s, "PCG-I", 3)
+    )
+
+    f = init_state(spark, records, cache, SinglePartition(), 1, seed=53)
+    f = transition_fused(f, "PCG-I", 2, local=False)
+    assert f.block_df is not None
+    f, jobs["fused_spark"] = _jobs_in(
+        spark, lambda: transition_fused(f, "PCG-I", 2, local=False)
+    )
+
+    loc = transition_local(two_part(55), "PCG-I")
+    assert loc.local_parts is not None
+    loc, jobs["local"] = _jobs_in(spark, lambda: transition_local(loc, "PCG-I"))
+    fl = transition_fused(
+        init_state(spark, records, cache, SinglePartition(), 1, seed=57),
+        "PCG-I", 2,
+    )
+    assert fl.local_parts is not None
+    fl, jobs["fused_local"] = _jobs_in(
+        spark, lambda: transition_fused(fl, "PCG-I", 3, local=True)
+    )
+    assert jobs == {
+        "transition": 2, "multisweep_k3": 2, "fused_spark": 2,
+        "local": 0, "fused_local": 0,
+    }, jobs
