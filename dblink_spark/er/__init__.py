@@ -9,9 +9,10 @@ Layering (all reference citations point into /root/reference):
   (ref: AttributeIndex.scala, RecordsCache.scala).
 - model: the numpy Gibbs kernels (ref: GibbsUpdates.scala semantics).
 - state/sampler: the Markov chain as a DataFrame keyed by partition_id,
-  advanced by groupBy("partition_id").applyInPandas(kernel) — one Arrow
-  round-trip + one shuffle per iteration, matching the reference's
-  mapPartitions + partitionBy cadence (ref: State.scala, Sampler.scala).
+  advanced by groupBy("partition_id").applyInArrow(kernel) over packed
+  block rows — one Arrow round-trip + one shuffle per iteration, matching
+  the reference's mapPartitions + partitionBy cadence (ref: State.scala,
+  Sampler.scala); driver-sized chains run the same kernels driver-local.
 - partitioning: k-d tree entity-space partitioner fit via DataFrame
   histograms (ref: partitioning/*.scala).
 - chain/analysis/metrics: posterior queries and evaluation as pure

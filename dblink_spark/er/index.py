@@ -256,16 +256,10 @@ def build_attribute_index(
     # domain) and a per-Row Python loop dominated the whole index build;
     # lexsort + bincount does the same grouping in ~100 ms. Per-a blocks
     # are sorted by b_id exactly as the per-value argsort produced.
-    if hasattr(pairs_df, "toArrow"):
-        tbl = pairs_df.toArrow()
-        a_ids = np.asarray(tbl.column("a_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-        b_ids = np.asarray(tbl.column("b_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-        sims = np.asarray(tbl.column("exp_sim").to_numpy(zero_copy_only=False), dtype=np.float64)
-    else:  # pragma: no cover - pre-Arrow fallback
-        rows = pairs_df.collect()
-        a_ids = np.array([r["a_id"] for r in rows], dtype=np.int64)
-        b_ids = np.array([r["b_id"] for r in rows], dtype=np.int64)
-        sims = np.array([r["exp_sim"] for r in rows], dtype=np.float64)
+    tbl = pairs_df.toArrow()
+    a_ids = np.asarray(tbl.column("a_id").to_numpy(zero_copy_only=False), dtype=np.int64)
+    b_ids = np.asarray(tbl.column("b_id").to_numpy(zero_copy_only=False), dtype=np.int64)
+    sims = np.asarray(tbl.column("exp_sim").to_numpy(zero_copy_only=False), dtype=np.float64)
     order = np.lexsort((b_ids, a_ids))
     a_ids, b_ids, sims = a_ids[order], b_ids[order], sims[order]
     offsets = np.concatenate(

@@ -47,11 +47,6 @@ class SamplerOptions:
     thinning_interval: int = 1
     write_buffer_size: int = 10  # ref: Sampler.scala:57
     diagnostics_path: str | None = None
-    #: single-partition chains: run all iterations between save points as
-    #: fused sweeps inside one Spark job (see state.transition_fused). Saves
-    #: the per-job scheduling floor; diagnostics are still written once per
-    #: saved sample (matching the reference, Sampler.scala:107-108).
-    fuse_sweeps: bool = True
     #: multi-partition chains whose total record count is at most this run
     #: their per-iteration kernels driver-local (state.transition_local) —
     #: same chain content as the Spark path, without the per-job floor.
@@ -80,6 +75,45 @@ class SamplerOptions:
     #: Burn-in sweeps never overrun the burn-in boundary, so the phase
     #: switch lands exactly at ``burnin_interval``.
     multisweep_burnin_k: int = 1
+
+
+def _next_save(it: int, opts: SamplerOptions) -> int:
+    """First post-burn-in iteration > ``it`` on the thinning grid."""
+    thin = max(opts.thinning_interval, 1)
+    base = max(it + 1, opts.burnin_interval + 1)
+    r = (base - opts.burnin_interval) % thin
+    return base if r == 0 else base + (thin - r)
+
+
+def _step_policy(state: State, opts: SamplerOptions, run_local: bool):
+    """The sampler's execution policy: ``(step, k)`` — the public transition
+    to call next and its sweep count (None for the one-iteration steps,
+    which take no count). Fused steps never overrun a save point or the
+    burn-in boundary.
+
+    - p=1: every iteration up to the next save point as fused driver-local
+      sweeps (``transition_fused``; diagnostics are still written once per
+      saved sample, matching the reference, Sampler.scala:107-108);
+    - driver-sized multi-partition chains (``run_local``):
+      ``transition_local``, one iteration per step;
+    - distributed chains: ``transition_multisweep`` when fusion is asked
+      for in the current phase, else ``transition``.
+
+    Steps are looked up as module globals at call time, so a rebinding of
+    ``sampler.transition*`` (profilers, tests) is honoured."""
+    it = state.iteration
+    if state.num_partitions == 1:
+        return transition_fused, _next_save(it, opts) - it
+    if run_local:
+        return transition_local, None
+    burnin_k = max(opts.multisweep_burnin_k, opts.multisweep_k)
+    if it < opts.burnin_interval and burnin_k > 1:
+        # fuse toward the burn-in boundary (phase switch exact)
+        return transition_multisweep, min(burnin_k, opts.burnin_interval - it)
+    if opts.multisweep_k > 1:
+        # fuse toward the next save point
+        return transition_multisweep, min(opts.multisweep_k, _next_save(it, opts) - it)
+    return transition, None
 
 
 def linkage_sample(state: State) -> DataFrame:
@@ -192,16 +226,6 @@ def sample(
         )
 
     saved = 0
-    thin = max(opts.thinning_interval, 1)
-
-    def next_emit_after(it: int) -> int:
-        """First post-burn-in iteration > ``it`` on the thinning grid —
-        the save-point arithmetic the fused (p=1) and multisweep (p>1)
-        branches must share (review r14: duplicated copies nine lines
-        apart would let the two paths' save cadences silently diverge)."""
-        base = max(it + 1, opts.burnin_interval + 1)
-        r = (base - opts.burnin_interval) % thin
-        return base if r == 0 else base + (thin - r)
     n_records = sum(state.cache.file_sizes.values())
     run_local = (
         state.num_partitions > 1
@@ -236,32 +260,11 @@ def sample(
             n_records, opts.local_exec_max_records,
         )
     while saved < sample_size:
-        if opts.fuse_sweeps and state.num_partitions == 1:
-            # jump straight to the next save point in one Spark job
-            state = transition_fused(
-                state, opts.sampler,
-                next_emit_after(state.iteration) - state.iteration,
-            )
-        elif run_local:
-            state = transition_local(state, opts.sampler)
-        elif opts.multisweep_k > 1 or (
-            opts.multisweep_burnin_k > 1
-            and state.iteration < opts.burnin_interval
-        ):
-            in_burnin = state.iteration < opts.burnin_interval
-            if in_burnin:
-                # fuse toward the burn-in boundary (phase switch exact)
-                kmax = max(opts.multisweep_burnin_k, opts.multisweep_k)
-                bound = opts.burnin_interval - state.iteration
-            else:
-                # fuse toward the next save point
-                kmax = opts.multisweep_k
-                bound = next_emit_after(state.iteration) - state.iteration
-            state = transition_multisweep(
-                state, opts.sampler, max(1, min(kmax, bound))
-            )
-        else:
-            state = transition(state, opts.sampler)
+        step, k = _step_policy(state, opts, run_local)
+        state = (
+            step(state, opts.sampler) if k is None
+            else step(state, opts.sampler, k)
+        )
         it = state.iteration
         past_burnin = it > opts.burnin_interval
         on_thin = (it - opts.burnin_interval) % max(opts.thinning_interval, 1) == 0

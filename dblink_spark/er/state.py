@@ -40,6 +40,7 @@ documents the weaker guarantee, State.scala:47-49).
 
 from __future__ import annotations
 
+import time
 import weakref
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
@@ -67,6 +68,7 @@ from dblink_spark.operators.workerboot import make_worker_boot
 from dblink_spark.er.model import (
     PartitionState,
     canonicalize_partition_state,
+    concat_partition_states,
     partition_summary,
     split_partition_state,
     transition_partition,
@@ -207,126 +209,26 @@ class State:
             )
             return self._df
         if self._df is None:
-            try:
-                # Arrow-native marshal (Spark 4.0+ createDataFrame accepts a
-                # pyarrow Table): no per-row Python lists, ~10x cheaper than
-                # the pandas path at 100k+ records.
-                tbl = pa.concat_tables(
-                    [
-                        _partition_state_to_pa(
-                            self.local_parts[pid],
-                            self.partition_fn(self.local_parts[pid].entities),
-                            pid,
-                            self.cache,
-                        )
-                        for pid in sorted(self.local_parts)
-                    ]
-                )
-                self._df = self.spark.createDataFrame(tbl, schema=STATE_SCHEMA)
-                return self._df
-            except TypeError:  # pragma: no cover - pre-4.0 Spark fallback
-                pass
-            pdfs = [
-                _partition_state_to_pdf(
-                    self.local_parts[pid],
-                    self.partition_fn(self.local_parts[pid].entities),
-                    pid,
-                    self.cache,
-                )
-                for pid in sorted(self.local_parts)
-            ]
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            # pandas infers the mostly-None summary scalars as float64
-            # (None -> NaN), which LongType rejects; force object dtype
-            pdf["loglik"] = np.array(
-                [None if pd.isna(v) else float(v) for v in pdf["loglik"]],
-                dtype=object,
+            # Arrow-native marshal (createDataFrame accepts a pyarrow
+            # Table): no per-row Python lists
+            tbl = pa.concat_tables(
+                [
+                    _partition_state_to_pa(
+                        self.local_parts[pid],
+                        self.partition_fn(self.local_parts[pid].entities),
+                        pid,
+                        self.cache,
+                    )
+                    for pid in sorted(self.local_parts)
+                ]
             )
-            pdf["n_isolates"] = np.array(
-                [None if pd.isna(v) else int(v) for v in pdf["n_isolates"]],
-                dtype=object,
-            )
-            self._df = self.spark.createDataFrame(pdf, STATE_SCHEMA)
+            self._df = self.spark.createDataFrame(tbl, schema=STATE_SCHEMA)
         return self._df
 
 
 # ---------------------------------------------------------------------------
-# pandas <-> kernel marshalling
+# cluster-row marshalling (init / save / analysis interchange format)
 # ---------------------------------------------------------------------------
-
-
-def _pdf_to_partition_state(pdf: pd.DataFrame, num_attrs: int) -> PartitionState:
-    ents = np.array([np.asarray(v, dtype=np.int32) for v in pdf["ent_values"]])
-    rec_ids, rec_fids, link = [], [], []
-    val_chunks, dist_chunks = [], []
-    for e, (ids, fids, vals, dist) in enumerate(
-        zip(pdf["rec_ids"], pdf["rec_fids"], pdf["rec_values"], pdf["rec_dist"])
-    ):
-        rec_ids.extend(ids)
-        rec_fids.extend(fids)
-        link.extend([e] * len(ids))
-        val_chunks.append(np.frombuffer(bytes(vals), dtype="<i4"))
-        dist_chunks.append(np.frombuffer(bytes(dist), dtype=np.uint8))
-    R = len(rec_ids)
-    return PartitionState(
-        entities=ents.reshape(len(pdf), num_attrs),
-        rec_ids=np.asarray(rec_ids, dtype=str),
-        rec_fids=np.array(rec_fids, dtype=np.int32),
-        rec_values=(
-            np.concatenate(val_chunks).astype(np.int32).reshape(R, num_attrs)
-            if R
-            else np.empty((0, num_attrs), dtype=np.int32)
-        ),
-        rec_dist=(
-            np.concatenate(dist_chunks).astype(bool).reshape(R, num_attrs)
-            if R
-            else np.empty((0, num_attrs), dtype=bool)
-        ),
-        link=np.array(link, dtype=np.int64),
-    )
-
-
-def _partition_state_to_pdf(
-    ps: PartitionState, new_pids: np.ndarray, summary_pid: int, cache: RecordsCache
-) -> pd.DataFrame:
-    order = np.argsort(ps.link, kind="stable")
-    counts = np.bincount(ps.link, minlength=ps.num_entities)
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    rows = []
-    for e in range(ps.num_entities):
-        rs = order[bounds[e] : bounds[e + 1]]
-        rows.append(
-            {
-                "partition_id": int(new_pids[e]),
-                "is_summary": False,
-                "ent_values": ps.entities[e].tolist(),
-                "rec_ids": [ps.rec_ids[r] for r in rs],
-                "rec_fids": ps.rec_fids[rs].tolist(),
-                "rec_values": ps.rec_values[rs].astype("<i4").tobytes(),
-                "rec_dist": ps.rec_dist[rs].astype(np.uint8).tobytes(),
-                "loglik": None,
-                "n_isolates": None,
-                "agg_dist": None,
-                "rec_dist_hist": None,
-            }
-        )
-    loglik, n_iso, agg_dist, hist = partition_summary(ps, cache)
-    rows.append(
-        {
-            "partition_id": summary_pid,
-            "is_summary": True,
-            "ent_values": None,
-            "rec_ids": None,
-            "rec_fids": None,
-            "rec_values": None,
-            "rec_dist": None,
-            "loglik": loglik,
-            "n_isolates": int(n_iso),
-            "agg_dist": agg_dist.tolist(),
-            "rec_dist_hist": hist.tolist(),
-        }
-    )
-    return pd.DataFrame(rows)
 
 
 #: Arrow twin of STATE_SCHEMA (exact dtype mapping Spark uses for Arrow UDFs)
@@ -373,13 +275,11 @@ def _binary_column_to_array(col: pa.ChunkedArray, dtype, n_items: int) -> np.nda
 
 
 def _pa_to_partition_state(tbl: pa.Table, num_attrs: int) -> PartitionState:
-    """Arrow-native twin of ``_pdf_to_partition_state``: nested list columns
-    unpack via vectorized ``flatten()`` on the list offsets instead of
-    materializing millions of per-cell Python lists.
-
-    This is the decisive distributed-path optimization: at 300k records the
-    Arrow→pandas conversion of ``array<array<int>>`` columns cost ~10s per
-    iteration per task while the MCMC kernel itself cost ~1s."""
+    """Decode cluster rows (STATE_SCHEMA) into one PartitionState: nested
+    list columns unpack via vectorized ``flatten()`` on the list offsets
+    instead of materializing millions of per-cell Python lists (at 300k
+    records a pandas decode of ``array<array<int>>`` columns cost ~10 s per
+    iteration per task while the MCMC kernel itself cost ~1 s)."""
     import pyarrow.compute as pc
 
     E = tbl.num_rows
@@ -472,37 +372,40 @@ def _ps_cluster_body_pa(ps: PartitionState, new_pids: np.ndarray) -> pa.Table:
     )
 
 
-def _state_summary_row_pa(
-    summary_pid: int, loglik, n_iso, agg_dist, hist
+def _summary_row_pa(
+    schema: pa.Schema, summary_pid: int, loglik, n_iso, agg_dist, hist
 ) -> pa.Table:
-    """One in-band summary row in the cluster-row (STATE) schema."""
+    """One in-band summary row in ``schema`` (cluster-row or BLOCK): the
+    summary fields set, every per-cluster field null."""
+    cells = {
+        "partition_id": pa.array([summary_pid], type=pa.int32()),
+        "is_summary": pa.array([True]),
+        "loglik": pa.array([float(loglik)], type=pa.float64()),
+        "n_isolates": pa.array([int(n_iso)], type=pa.int64()),
+        "agg_dist": pa.array(
+            [np.asarray(agg_dist, dtype=np.int64)], type=pa.list_(pa.int64())
+        ),
+        "rec_dist_hist": pa.array(
+            [np.asarray(hist, dtype=np.int64)], type=pa.list_(pa.int64())
+        ),
+    }
     return pa.Table.from_arrays(
-        [
-            pa.array([summary_pid], type=pa.int32()),
-            pa.array([True]),
-            pa.nulls(1, pa.list_(pa.int32())),
-            pa.nulls(1, pa.list_(pa.string())),
-            pa.nulls(1, pa.list_(pa.int32())),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.array([float(loglik)], type=pa.float64()),
-            pa.array([int(n_iso)], type=pa.int64()),
-            pa.array([np.asarray(agg_dist, dtype=np.int64)], type=pa.list_(pa.int64())),
-            pa.array([np.asarray(hist, dtype=np.int64)], type=pa.list_(pa.int64())),
-        ],
-        schema=_PA_STATE_SCHEMA,
+        [cells.get(f.name, pa.nulls(1, f.type)) for f in schema], schema=schema
     )
 
 
 def _partition_state_to_pa(
     ps: PartitionState, new_pids: np.ndarray, summary_pid: int, cache: RecordsCache
 ) -> pa.Table:
-    """Arrow-native twin of ``_partition_state_to_pdf``: cluster rows plus
-    the in-band summary row."""
-    body = _ps_cluster_body_pa(ps, new_pids)
-    loglik, n_iso, agg_dist, hist = partition_summary(ps, cache)
+    """Cluster rows (STATE_SCHEMA) for one PartitionState plus its in-band
+    summary row."""
     return pa.concat_tables(
-        [body, _state_summary_row_pa(summary_pid, loglik, n_iso, agg_dist, hist)]
+        [
+            _ps_cluster_body_pa(ps, new_pids),
+            _summary_row_pa(
+                _PA_STATE_SCHEMA, summary_pid, *partition_summary(ps, cache)
+            ),
+        ]
     )
 
 
@@ -634,38 +537,18 @@ def _block_output_table(
     (clusters routed by ``new_pids``) plus the in-band summary row."""
     parts = split_partition_state(ps, np.asarray(new_pids, dtype=np.int64))
     rows = [_ps_to_block_cells(sub, dst) for dst, sub in sorted(parts.items())]
-    loglik, n_iso, agg_dist, hist = partition_summary(ps, cache)
-    n_block_cols = 10  # cells emitted by _ps_to_block_cells
-    arrays = []
-    for idx, field in enumerate(_PA_BLOCK_SCHEMA):
-        if idx < n_block_cols:
-            vals = [r[idx] for r in rows]
-        elif field.name == "loglik":
-            vals = [None] * len(rows)
-        elif field.name == "n_isolates":
-            vals = [None] * len(rows)
-        else:
-            vals = [None] * len(rows)
-        arrays.append(pa.array(vals, type=field.type))
-    body = pa.Table.from_arrays(arrays, schema=_PA_BLOCK_SCHEMA)
-    summ = pa.Table.from_arrays(
+    n_cells = 10  # cells per _ps_to_block_cells row; the rest are summary
+    body = pa.Table.from_arrays(
         [
-            pa.array([src_pid], type=pa.int32()),
-            pa.array([True]),
-            pa.nulls(1, pa.int64()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.nulls(1, pa.binary()),
-            pa.array([float(loglik)], type=pa.float64()),
-            pa.array([int(n_iso)], type=pa.int64()),
-            pa.array([np.asarray(agg_dist, dtype=np.int64)], type=pa.list_(pa.int64())),
-            pa.array([np.asarray(hist, dtype=np.int64)], type=pa.list_(pa.int64())),
+            pa.array([r[i] for r in rows], type=f.type)
+            if i < n_cells
+            else pa.nulls(len(rows), f.type)
+            for i, f in enumerate(_PA_BLOCK_SCHEMA)
         ],
         schema=_PA_BLOCK_SCHEMA,
+    )
+    summ = _summary_row_pa(
+        _PA_BLOCK_SCHEMA, src_pid, *partition_summary(ps, cache)
     )
     return pa.concat_tables([body, summ])
 
@@ -695,7 +578,8 @@ def _blocks_df_to_cluster_df(block_df: DataFrame, num_attrs: int) -> DataFrame:
                 )
             for i in range(summ.num_rows):
                 out.append(
-                    _state_summary_row_pa(
+                    _summary_row_pa(
+                        _PA_STATE_SCHEMA,
                         summ.column("partition_id")[i].as_py(),
                         summ.column("loglik")[i].as_py(),
                         summ.column("n_isolates")[i].as_py(),
@@ -719,21 +603,19 @@ def run_fused_sweeps(
     num_partitions: int,
     pid: int,
     n_sweeps: int,
-    theta_per_sweep: bool = True,
 ) -> PartitionState:
     """`n_sweeps` consecutive Markov transitions over one partition's state.
 
-    Shared by the Spark `applyInPandas` kernel and the driver-local fused
-    path (`transition_fused(local=True)`) so both produce bit-identical
-    chains. Sweep ``j`` uses rng seed ``seed + j*num_partitions + pid`` —
-    exactly the seed the unfused path gives iteration ``j``. Between fused
-    sweeps θ is redrawn in place when ``theta_per_sweep`` (single
-    partition ⇒ local distortion counts are the global counts, so this is
-    the same Beta posterior the driver would sample; ref:
-    GibbsUpdates.scala:305-320). With ``theta_per_sweep=False`` the given
-    θ holds for ALL sweeps — the multi-partition fused variant
-    (``transition_multisweep``), where a per-sweep local redraw would
-    sample from partition-local counts, a different model.
+    Shared by both executors of :func:`_advance` (the Spark ``applyInArrow``
+    kernel and the driver-local loop), so they produce bit-identical chains.
+    Sweep ``j`` uses rng seed ``seed + j*num_partitions + pid`` — exactly
+    the seed an unfused chain gives iteration ``j``. On a single-partition
+    chain θ is redrawn in place between sweeps: the partition's distortion
+    counts are the global counts, so this is the same Beta posterior the
+    driver would sample (ref: GibbsUpdates.scala:305-320). On a
+    multi-partition chain the given θ holds for ALL sweeps
+    (``transition_multisweep``): a per-sweep local redraw would sample from
+    partition-local counts, a different model.
 
     The state is canonicalized on entry (content-determined row order), so
     the chain does not depend on shuffle fetch order — the property that
@@ -745,7 +627,7 @@ def run_fused_sweeps(
     th = theta
     for j in range(n_sweeps):
         rng = np.random.default_rng(seed + j * num_partitions + pid)
-        if j > 0 and theta_per_sweep:
+        if j > 0 and num_partitions == 1:
             _, _, agg, _ = partition_summary(ps, cache)
             th = draw_theta(rng, cache, agg.reshape(num_attrs, num_files))
         ps = transition_partition(rng, ps, cache, th, mode)
@@ -917,45 +799,6 @@ def _resolve_cache(cache_ref) -> RecordsCache:
     return cache_ref.value if isinstance(cache_ref, Broadcast) else cache_ref
 
 
-def make_transition_kernel(
-    cache: RecordsCache,
-    theta: np.ndarray,
-    mode: str,
-    seed: int,
-    partition_fn: Callable[[np.ndarray], np.ndarray],
-    n_sweeps: int = 1,
-    num_partitions: int = 1,
-    theta_per_sweep: bool = True,
-):
-    """Build the applyInPandas kernel for one iteration (or, with
-    ``n_sweeps > 1``, several fused iterations — single-partition only; see
-    ``transition_fused``). theta/seed are captured in the closure — the
-    Python-native equivalent of the reference's per-iteration distProbs
-    broadcast (ref: State.scala:83-84). Sweep ``j`` uses rng seed
-    ``seed + j*num_partitions + pid``, exactly the seed the unfused path
-    would give iteration ``j``."""
-    cache_ref = cache
-    num_attrs = _resolve_cache(cache_ref).num_attributes
-    boot = make_worker_boot()
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        boot()  # stat-guard zipimport invalidation (operators/workerboot.py)
-        cache = _resolve_cache(cache_ref)
-        pid = int(key[0])
-        pdf = pdf[~pdf["is_summary"]]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in STATE_SCHEMA.fields])
-        ps = _pdf_to_partition_state(pdf, num_attrs)
-        ps = run_fused_sweeps(
-            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps,
-            theta_per_sweep,
-        )
-        new_pids = partition_fn(ps.entities)
-        return _partition_state_to_pdf(ps, new_pids, pid, cache)
-
-    return kernel
-
-
 def make_transition_kernel_arrow(
     cache: RecordsCache,
     theta: np.ndarray,
@@ -964,15 +807,16 @@ def make_transition_kernel_arrow(
     partition_fn: Callable[[np.ndarray], np.ndarray],
     n_sweeps: int = 1,
     num_partitions: int = 1,
-    theta_per_sweep: bool = True,
 ):
-    """``applyInArrow`` twin of :func:`make_transition_kernel`: identical
-    chain content (same ``run_fused_sweeps``, same canonicalization, same
-    seeds) but the state crosses the JVM/Python boundary as packed Arrow
-    buffers. Accepts EITHER cluster rows (first transition after init/
-    load) or BLOCK rows (steady state, detected by the ``counts`` column)
-    and always emits BLOCK rows — grouped Arrow execution costs ~30-40us
-    per input row, so keeping the loop in block format turns the group
+    """Build the ``applyInArrow`` kernel for one Spark step: ``n_sweeps``
+    fused sweeps (``run_fused_sweeps``) per partition group. theta/seed are
+    captured in the closure — the Python-native equivalent of the
+    reference's per-iteration distProbs broadcast (ref: State.scala:83-84).
+    The state crosses the JVM/Python boundary as packed Arrow buffers. The
+    kernel accepts EITHER cluster rows (first transition after init/load)
+    or BLOCK rows (steady state, detected by the ``counts`` column) and
+    always emits BLOCK rows — grouped Arrow execution costs ~30-40us per
+    input row, so keeping the loop in block format turns the group
     boundary from O(clusters) rows into O(p) per kernel."""
     cache_ref = cache
     num_attrs = _resolve_cache(cache_ref).num_attributes
@@ -983,8 +827,7 @@ def make_transition_kernel_arrow(
 
         boot()  # stat-guard zipimport invalidation (operators/workerboot.py)
         cache = _resolve_cache(cache_ref)
-        k0 = key[0]
-        pid = int(k0.as_py() if hasattr(k0, "as_py") else k0)
+        pid = int(key[0].as_py())
         tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
         if tbl.num_rows == 0:
             return _PA_BLOCK_SCHEMA.empty_table()
@@ -993,42 +836,12 @@ def make_transition_kernel_arrow(
         else:
             ps = _pa_to_partition_state(tbl, num_attrs)
         ps = run_fused_sweeps(
-            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps,
-            theta_per_sweep,
+            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps
         )
         new_pids = partition_fn(ps.entities)
         return _block_output_table(ps, new_pids, pid, cache)
 
     return kernel
-
-
-def _apply_kernel_grouped(
-    df_in: DataFrame,
-    keys: list[str],
-    cache: RecordsCache,
-    theta: np.ndarray,
-    mode: str,
-    seed: int,
-    partition_fn: Callable[[np.ndarray], np.ndarray],
-    n_sweeps: int = 1,
-    num_partitions: int = 1,
-    theta_per_sweep: bool = True,
-) -> tuple[DataFrame, bool]:
-    """Group by the kernel keys and apply the transition kernel. Returns
-    ``(new_df, is_block)``: Arrow-capable Spark (4.0+) runs the block-format
-    loop; the pandas fallback keeps the cluster-row format."""
-    grouped = df_in.groupBy(*keys)
-    if hasattr(grouped, "applyInArrow"):
-        kernel = make_transition_kernel_arrow(
-            cache, theta, mode, seed, partition_fn, n_sweeps,
-            num_partitions, theta_per_sweep,
-        )
-        return grouped.applyInArrow(kernel, BLOCK_SCHEMA), True
-    kernel = make_transition_kernel(
-        cache, theta, mode, seed, partition_fn, n_sweeps, num_partitions,
-        theta_per_sweep,
-    )
-    return grouped.applyInPandas(kernel, STATE_SCHEMA), False
 
 
 def _cache_ref(state: State, df: DataFrame):
@@ -1104,47 +917,92 @@ def _consume_state_dfs(state: State, old_dfs) -> None:
         state._released = True
 
 
-def _require_live(state: State, op: str) -> None:
-    if state._released:
-        raise StateConsumedError(
-            f"{op}: state at iteration {state.iteration} was already "
-            "consumed by a later transition; advance the state the last "
-            "transition returned, or fork from the chain root / an "
-            "assign_partitions result"
+def _df_to_local_parts(
+    df: DataFrame, num_attrs: int
+) -> dict[int, PartitionState]:
+    """Collect a cluster-row state DataFrame over Arrow into driver-local
+    per-partition states."""
+    import pyarrow.compute as pc
+
+    tbl = df.toArrow()
+    tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
+    pids = np.unique(tbl.column("partition_id").to_numpy(zero_copy_only=False))
+    return {
+        int(pid): _pa_to_partition_state(
+            tbl.filter(pc.equal(tbl.column("partition_id"), int(pid))),
+            num_attrs,
         )
+        for pid in pids
+    }
 
 
-def transition(
-    state: State, mode: str, phase_sink: dict[str, float] | None = None
-) -> State:
-    """One Markov transition (ref: State.scala:78-99 `nextState`):
-    θ update (driver Beta draws) → partition kernels (one shuffle) →
-    in-band summary collection.
+def _reduce_summaries(parts, cache: RecordsCache) -> SummaryVars:
+    """Finish the per-partition summary reduction on the driver, summing
+    ``(loglik, n_isolates, agg_dist, rec_dist_hist)`` tuples in the order
+    given."""
+    A, Fn = cache.num_attributes, len(cache.file_ids)
+    loglik, n_iso = 0.0, 0
+    agg = np.zeros(A * Fn, dtype=np.int64)
+    hist = np.zeros(A + 1, dtype=np.int64)
+    for ll, ni, ag, hs in parts:
+        loglik += ll
+        n_iso += int(ni)
+        agg += np.asarray(ag, dtype=np.int64)
+        hist += np.asarray(hs, dtype=np.int64)
+    return SummaryVars(
+        num_isolates=n_iso,
+        log_likelihood=float(loglik),
+        agg_distortions=agg.reshape(A, Fn),
+        rec_distortions=hist,
+    )
 
-    CONSUMES its input past iteration 0: the previous state's checkpoint
-    storage is released once the new state materializes (r13 — pre-r13
-    this leaked ~60 MB/iteration at 1M records), so reading or advancing
-    a STALE mid-chain handle you already transitioned past raises
-    ``StateConsumedError`` by name (r14, the r13 ADVICE: previously the
-    reuse surfaced as a raw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND from deep
-    inside Spark). Iteration-0 roots and `assign_partitions` forks stay
-    readable.
 
-    ``phase_sink`` (bench/profiling only): when given, receives
-    ``{"plan": s, "job": s}`` — the driver-side cost (θ draw, salt
-    column, kernel plan build + cloudpickle, lazy-checkpoint Catalyst
-    planning) vs the one Spark job (scan → shuffle → Python kernels →
-    checkpoint materialization → summary collect). Zero overhead when
-    None (two branch checks)."""
-    import time as _time
+def _execute_local(
+    state: State, theta: np.ndarray, mode: str, n_sweeps: int
+) -> tuple[dict[int, PartitionState], SummaryVars]:
+    """Driver-local executor: sweep each partition's numpy state in pid
+    order, reduce their post-sweep, pre-migration summaries in pid order
+    (what the Spark kernel emits in-band), then migrate clusters to the
+    partition of their new entity values with an in-memory split + concat.
+    Launches no Spark job once the chain holds ``local_parts``."""
+    cache, p = state.cache, state.num_partitions
+    parts = state.local_parts
+    if parts is None:
+        parts = _df_to_local_parts(state.df, cache.num_attributes)
+    swept = {
+        pid: run_fused_sweeps(
+            parts[pid], cache, theta, mode, state.current_seed, p, pid, n_sweeps
+        )
+        for pid in sorted(parts)
+    }
+    summary = _reduce_summaries(
+        (partition_summary(swept[pid], cache) for pid in sorted(swept)), cache
+    )
+    buckets: dict[int, list[PartitionState]] = {}
+    for pid in sorted(swept):
+        ps = swept[pid]
+        for t, sub in split_partition_state(
+            ps, state.partition_fn(ps.entities)
+        ).items():
+            buckets.setdefault(t, []).append(sub)
+    migrated = {t: concat_partition_states(subs) for t, subs in buckets.items()}
+    return migrated, summary
 
-    _require_live(state, "transition")
-    t0 = _time.time() if phase_sink is not None else 0.0
-    cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
 
+def _execute_spark(
+    state: State,
+    theta: np.ndarray,
+    mode: str,
+    n_sweeps: int,
+    phase_sink: dict[str, float] | None,
+    t0: float,
+) -> tuple[DataFrame, SummaryVars]:
+    """Spark executor: the salted ``groupBy(...).applyInArrow`` block
+    kernel (one shuffle; clusters migrate by virtue of the *next* groupBy),
+    a lazy ``localCheckpoint``, then ``collect_summary`` — the action that
+    materializes the checkpoint, so the step costs one collect."""
     # steady state keeps the chain in block format (O(p) grouped rows per
-    # kernel); entry from init/load/assign feeds cluster rows once
+    # kernel); entry from init/load/assign/local feeds cluster rows once
     src = state.block_df if state.block_df is not None else state.df
     p = state.num_partitions
     df_in, keys = _salted_group(src, p, num_buckets=p)
@@ -1152,48 +1010,104 @@ def transition(
     # builds the QueryExecution (and snapshots SQLConf) even though the lazy
     # materialization only happens at the summary collect below.
     with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-        new_df, is_block = _apply_kernel_grouped(
-            df_in, keys, _cache_ref(state, df_in), theta, mode,
-            state.current_seed, state.partition_fn, num_partitions=p,
+        kernel = make_transition_kernel_arrow(
+            _cache_ref(state, df_in), theta, mode, state.current_seed,
+            state.partition_fn, n_sweeps, p,
         )
-        # Truncate lineage every iteration: the DataFrame analogue of the
+        # Truncate lineage every step: the DataFrame analogue of the
         # reference's persist + periodic checkpoint (ref: Sampler.scala:56,
         # util/PeriodicCheckpointer.scala) — without this the plan grows per
-        # iteration and Catalyst analysis time dominates. Lazy: the summary
-        # collect right below materializes the checkpoint, so each transition
-        # costs ONE job instead of two.
-        new_df = new_df.localCheckpoint(eager=False)
+        # iteration and Catalyst analysis time dominates.
+        new_df = (
+            df_in.groupBy(*keys)
+            .applyInArrow(kernel, BLOCK_SCHEMA)
+            .localCheckpoint(eager=False)
+        )
+        t1 = time.time()
+        summary = collect_summary(new_df, state.cache)
         if phase_sink is not None:
-            t1 = _time.time()
             phase_sink["plan"] = t1 - t0
-        summary = collect_summary(new_df, cache)
-        if phase_sink is not None:
-            phase_sink["job"] = _time.time() - t1
+            phase_sink["job"] = time.time() - t1
+    return new_df, summary
+
+
+def _advance(
+    state: State,
+    mode: str,
+    n_sweeps: int,
+    *,
+    local: bool,
+    phase_sink: dict[str, float] | None = None,
+) -> State:
+    """The one Markov step behind every public transition (ref:
+    State.scala:78-99 `nextState`): θ drawn once on the driver from the
+    previous global summary, ``n_sweeps`` kernel sweeps per partition
+    (``run_fused_sweeps``), cluster migration, summary reduction — run by
+    the driver-local executor (``local``) or the Spark executor. Both
+    produce the same chain; the seed advances ``n_sweeps`` per partition.
+
+    CONSUMES its input past iteration 0: the previous state's checkpoint
+    storage is released once the new state materializes (pre-r13 this
+    leaked ~60 MB/iteration at 1M records), so reading or advancing a
+    STALE mid-chain handle raises ``StateConsumedError`` by name instead
+    of a raw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND from deep inside Spark.
+    Iteration-0 roots and ``assign_partitions`` forks stay readable.
+
+    ``phase_sink`` (bench/profiling only, Spark executor): receives
+    ``{"plan": s, "job": s}`` — the driver-side cost (θ draw, salt column,
+    kernel plan build + cloudpickle, lazy-checkpoint Catalyst planning) vs
+    the Spark work (scan → shuffle → Python kernels → checkpoint
+    materialization → summary collect)."""
+    if state._released:
+        raise StateConsumedError(
+            f"transition: state at iteration {state.iteration} was already "
+            "consumed by a later transition; advance the state the last "
+            "transition returned, or fork from the chain root / an "
+            "assign_partitions result"
+        )
+    t0 = time.time()
+    theta = draw_theta(state.rng, state.cache, state.summary.agg_distortions)
+    if local:
+        parts, summary = _execute_local(state, theta, mode, n_sweeps)
+        block_df = None
+    else:
+        block_df, summary = _execute_spark(
+            state, theta, mode, n_sweeps, phase_sink, t0
+        )
+        parts = None
     # never release the chain ROOT (iteration 0): init states are
-    # legitimately reused as fork points (part.fit(s0.df) after a
-    # warm fused transition; multi-partitioning sweeps); from
-    # iteration 1 on the predecessor is genuinely retired chain state
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
-    )
+    # legitimately reused as fork points (part.fit(s0.df) after a warm
+    # fused transition; multi-partitioning sweeps); from iteration 1 on
+    # the predecessor is genuinely retired chain state
+    old_dfs = [state._df, state.block_df] if state.iteration > 0 else []
     new_state = replace(
         state,
-        iteration=state.iteration + 1,
-        _df=None if is_block else new_df,
-        block_df=new_df if is_block else None,
-        local_parts=None,
+        iteration=state.iteration + n_sweeps,
+        _df=None,
+        block_df=block_df,
+        local_parts=parts,
         theta=theta,
         summary=summary,
-        current_seed=state.current_seed + state.num_partitions,
+        current_seed=state.current_seed + n_sweeps * state.num_partitions,
     )
     _consume_state_dfs(state, old_dfs)
     return new_state
 
 
+def transition(
+    state: State, mode: str, phase_sink: dict[str, float] | None = None
+) -> State:
+    """One Markov transition as one Spark step: θ update (driver Beta
+    draws) → partition kernels (one shuffle) → in-band summary collection.
+    Consumes its input past iteration 0; see :func:`_advance`."""
+    return _advance(state, mode, 1, local=False, phase_sink=phase_sink)
+
+
 def transition_fused(
     state: State, mode: str, n_sweeps: int, local: bool = True
 ) -> State:
-    """``n_sweeps`` Markov transitions without per-iteration Spark jobs.
+    """``n_sweeps`` Markov transitions in one step of a single-partition
+    chain.
 
     Only valid for single-partition chains: no clusters can migrate, and the
     partition's distortion counts are the global counts, so the per-sweep θ
@@ -1203,106 +1117,16 @@ def transition_fused(
     driver-local on the cached numpy state, skipping the Arrow round-trip
     and job-scheduling floor entirely; `state.df` rematerializes lazily when
     a DataFrame consumer (chain writer, save) needs it. ``local=False``
-    keeps the Spark `applyInPandas` execution (one job per call). Both paths
-    call `run_fused_sweeps`, so they produce bit-identical chains. The chain
-    is statistically identical to the unfused sampler (same kernels, same
-    seeds per sweep); only θ's RNG stream differs, so a fused run is not
-    bit-identical to an unfused one.
+    runs the same sweeps as one Spark step. Both executors produce
+    bit-identical chains. The chain is statistically identical to the
+    unfused sampler (same kernels, same seeds per sweep); only θ's RNG
+    stream differs, so a fused run is not bit-identical to an unfused one.
     """
-    _require_live(state, "transition_fused")
     if state.num_partitions != 1:
         raise ValueError("transition_fused requires a single-partition chain")
     if n_sweeps < 1:
         raise ValueError("n_sweeps must be >= 1")
-    cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
-    if local:
-        ps = state.local_parts[0] if state.local_parts else None
-        if ps is None:
-            if hasattr(state.df, "toArrow"):
-                import pyarrow.compute as pc
-
-                tbl = state.df.toArrow()
-                tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
-                ps = _pa_to_partition_state(tbl, cache.num_attributes)
-            else:
-                pdf = state.df.toPandas()
-                ps = _pdf_to_partition_state(
-                    pdf[~pdf["is_summary"]], cache.num_attributes
-                )
-        ps = run_fused_sweeps(
-            ps, cache, theta, mode, state.current_seed, 1, 0, n_sweeps
-        )
-        # Canonicalize record order (stable-grouped by entity) — the exact
-        # normalization a DataFrame round trip applies via
-        # _partition_state_to_pdf — so local continuation, save/resume, and
-        # the Spark fused path all see identical array layouts and produce
-        # bit-identical chains and float sums.
-        order = np.argsort(ps.link, kind="stable")
-        ps = PartitionState(
-            entities=ps.entities,
-            rec_ids=ps.rec_ids[order],
-            rec_fids=ps.rec_fids[order],
-            rec_values=ps.rec_values[order],
-            rec_dist=ps.rec_dist[order],
-            link=ps.link[order],
-        )
-        loglik, n_iso, agg, hist = partition_summary(ps, cache)
-        A, Fn = cache.num_attributes, len(cache.file_ids)
-        summary = SummaryVars(
-            num_isolates=int(n_iso),
-            log_likelihood=float(loglik),
-            agg_distortions=agg.reshape(A, Fn),
-            rec_distortions=hist,
-        )
-        # never release the chain ROOT (iteration 0): init states are
-        # legitimately reused as fork points (part.fit(s0.df) after a
-        # warm fused transition; multi-partitioning sweeps); from
-        # iteration 1 on the predecessor is genuinely retired chain state
-        old_dfs = (
-            [state._df, state.block_df] if state.iteration > 0 else []
-        )
-        new_state = replace(
-            state,
-            iteration=state.iteration + n_sweeps,
-            _df=None,
-            block_df=None,
-            local_parts={0: ps},
-            theta=theta,
-            summary=summary,
-            current_seed=state.current_seed + n_sweeps,
-        )
-    else:
-        src = state.block_df if state.block_df is not None else state.df
-        p = state.num_partitions
-        df_in, keys = _salted_group(src, p, num_buckets=p)
-        with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-            new_df, is_block = _apply_kernel_grouped(
-                df_in, keys, _cache_ref(state, df_in), theta, mode,
-                state.current_seed, state.partition_fn, n_sweeps=n_sweeps,
-                num_partitions=p,
-            )
-            new_df = new_df.localCheckpoint(eager=False)
-            summary = collect_summary(new_df, cache)
-        # never release the chain ROOT (iteration 0): init states are
-        # legitimately reused as fork points (part.fit(s0.df) after a
-        # warm fused transition; multi-partitioning sweeps); from
-        # iteration 1 on the predecessor is genuinely retired chain state
-        old_dfs = (
-            [state._df, state.block_df] if state.iteration > 0 else []
-        )
-        new_state = replace(
-            state,
-            iteration=state.iteration + n_sweeps,
-            _df=None if is_block else new_df,
-            block_df=new_df if is_block else None,
-            local_parts=None,
-            theta=theta,
-            summary=summary,
-            current_seed=state.current_seed + n_sweeps * state.num_partitions,
-        )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
+    return _advance(state, mode, n_sweeps, local=local)
 
 
 def transition_multisweep(
@@ -1310,16 +1134,14 @@ def transition_multisweep(
     phase_sink: dict[str, float] | None = None,
 ) -> State:
     """``n_sweeps`` kernel sweeps per Spark job on a MULTI-partition chain
-    (VERDICT r13 task 3) — the distributed fusion ``transition_fused``
-    provides for p=1.
+    — the distributed fusion ``transition_fused`` provides for p=1.
 
     The measured per-iteration floor is structural: ~0.157s of driver
-    plan-build + Python-job scheduling per transition at rl10k p=4
-    (bench ``er_iterfloor_*``), one job per iteration being the
-    reference's own cadence (ref: State.scala:78-99). Fusing k sweeps
-    into each job amortizes that floor k× — the kernels loop k times on
-    the partition state they already hold in memory, so the extra sweeps
-    cost only their numpy compute.
+    plan-build + Python-job scheduling per transition at rl10k p=4, one
+    job per iteration being the reference's own cadence (ref:
+    State.scala:78-99). Fusing k sweeps into each job amortizes that floor
+    k× — the kernels loop k times on the partition state they already hold
+    in memory, so the extra sweeps cost only their numpy compute.
 
     CHAIN-SEMANTICS DIFFERENCE vs k unfused transitions (opt-in, k=1 is
     bit-identical to ``transition`` — pinned in tests/test_er_mcmc.py):
@@ -1329,202 +1151,50 @@ def transition_multisweep(
       2..k a cluster whose entity drifted across a KD-tree cell boundary
       keeps sampling against its OLD partition's inverted index. Same
       class of approximation the partitioned model already makes within
-      one sweep (the reference's partitions, too, only exchange at
-      iteration boundaries); it relaxes k× further.
+      one sweep; it relaxes k× further.
     - **θ every k sweeps.** θ is drawn ONCE per job from the previous
       global summary and held fixed for all k sweeps (a per-sweep redraw
       inside a partition would sample from partition-LOCAL distortion
-      counts — a different posterior; that exact redraw is only valid at
-      p=1, where ``transition_fused`` does it). The (θ, linkage) blocked
-      scan remains a valid sampler — each block conditions on the
-      other's current value — just on a k-sweep cadence.
+      counts — a different posterior). The (θ, linkage) blocked scan
+      remains a valid sampler, just on a k-sweep cadence.
 
-    Both relaxations vanish at k=1. MEASURED quality cost (rl10k
-    reference config end-to-end, 1000-iteration chains, distributed
-    2-partition): F1/ARI 0.764 at k=1, 0.725 at k=2, 0.713 at k=8 — and
-    a 2000-iteration k=8 chain lands 0.703, so extra length does NOT
-    buy the cadence back at this scale. Throughput at p=4 scales
-    4.7/10.6/20.2/37.8 it/s for k=1/2/4/8. The honest trade: use k>1
-    where throughput is the binding constraint (burn-in, exploratory
-    runs, partition-count sweeps) and k=1 reference cadence for the
-    chains whose samples you keep — the measured best-of-both is
-    ``SamplerOptions.multisweep_burnin_k``: burn-in fused at k=8 +
-    sampling at k=1 lands F1/ARI 0.772 on the same rl10k workload
-    (kept-sample quality fully preserved, burn-in ~8x). The bench tracks
-    all three sides every round (VERDICT r14 task 2): throughput
-    (``er_rl10k_multisweep4p_k*``), the pessimal full-chain k=8 quality
-    pin (``er_rl10k_multisweep_f1/ari``), and the recommended
-    burn-in-fused config's kept-sample quality
-    (``er_rl10k_burninfused_f1/ari``).
+    MEASURED quality cost (rl10k reference config, 1000-iteration chains,
+    2 partitions): F1/ARI 0.764 at k=1, 0.725 at k=2, 0.713 at k=8; a
+    2000-iteration k=8 chain lands 0.703, so extra length does NOT buy the
+    cadence back. Throughput at p=4 scales 4.7/10.6/20.2/37.8 it/s for
+    k=1/2/4/8. Use k>1 where throughput binds (burn-in, exploratory runs)
+    and k=1 for the chains whose samples you keep — the measured
+    best-of-both is ``SamplerOptions.multisweep_burnin_k``: burn-in at k=8
+    + sampling at k=1 lands F1/ARI 0.772 on the same workload.
 
-    AT SCALE the sweet spot SHRINKS (r15, BENCH_1M_MULTISWEEP_r15.json —
-    1M records, interleaved k cycles, quiet host): the per-job floor the
-    fusion amortizes is a small share of a 1M iteration, so the win
-    saturates at k=2 (1.63x/1.42x/1.42x sec-per-iter at p=8/16/32) and
-    LARGER k erodes it (k=8: 1.12x/0.97x/1.12x) — sweeps 2..k sample
-    against progressively staler partitions and a fixed θ, and those
-    kernels run measurably slower. Equal-sweep quality at 1M shows no
-    k=8 penalty on the early chain (64-sweep final states: F1 0.157
-    fused vs 0.062 unfused from the same init + seed stream, 1.8x less
-    wall). Recommended k by regime: job-floor-bound chains (rl10k-class,
-    <~100k records/partition-count) take k=8 burn-in; kernel-bound 1M+
+    AT SCALE the sweet spot SHRINKS (BENCH_1M_MULTISWEEP_r15.json, 1M
+    records): the per-job floor is a small share of a 1M iteration, so the
+    win saturates at k=2 (1.63x/1.42x/1.42x sec-per-iter at p=8/16/32) and
+    larger k erodes it (k=8: 1.12x/0.97x/1.12x). Recommended k by regime:
+    job-floor-bound chains (rl10k-class) take k=8 burn-in; kernel-bound 1M+
     chains take k=2."""
-    import time as _time
-
-    _require_live(state, "transition_multisweep")
     if n_sweeps < 1:
         raise ValueError("n_sweeps must be >= 1")
-    t0 = _time.time() if phase_sink is not None else 0.0
-    cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
-    src = state.block_df if state.block_df is not None else state.df
-    p = state.num_partitions
-    df_in, keys = _salted_group(src, p, num_buckets=p)
-    with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-        new_df, is_block = _apply_kernel_grouped(
-            df_in, keys, _cache_ref(state, df_in), theta, mode,
-            state.current_seed, state.partition_fn, n_sweeps=n_sweeps,
-            num_partitions=p, theta_per_sweep=False,
-        )
-        new_df = new_df.localCheckpoint(eager=False)
-        if phase_sink is not None:
-            t1 = _time.time()
-            phase_sink["plan"] = t1 - t0
-        summary = collect_summary(new_df, cache)
-        if phase_sink is not None:
-            phase_sink["job"] = _time.time() - t1
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
-    )
-    new_state = replace(
-        state,
-        iteration=state.iteration + n_sweeps,
-        _df=None if is_block else new_df,
-        block_df=new_df if is_block else None,
-        local_parts=None,
-        theta=theta,
-        summary=summary,
-        current_seed=state.current_seed + n_sweeps * p,
-    )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
-
-
-def _df_to_local_parts(
-    df: DataFrame, num_attrs: int
-) -> dict[int, PartitionState]:
-    """Collect a state DataFrame into driver-local per-partition states
-    (Arrow-native on Spark 4.0+, pandas fallback otherwise)."""
-    if hasattr(df, "toArrow"):
-        import pyarrow.compute as pc
-
-        tbl = df.toArrow()
-        tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
-        pids = np.unique(
-            tbl.column("partition_id").to_numpy(zero_copy_only=False)
-        )
-        return {
-            int(pid): _pa_to_partition_state(
-                tbl.filter(pc.equal(tbl.column("partition_id"), int(pid))),
-                num_attrs,
-            )
-            for pid in pids
-        }
-    pdf = df.toPandas()
-    pdf = pdf[~pdf["is_summary"]]
-    return {
-        int(pid): _pdf_to_partition_state(grp, num_attrs)
-        for pid, grp in pdf.groupby("partition_id")
-    }
+    return _advance(state, mode, n_sweeps, local=False, phase_sink=phase_sink)
 
 
 def transition_local(state: State, mode: str) -> State:
     """One Markov transition executed entirely on the driver.
 
-    Same chain semantics as :func:`transition` — per-partition kernels with
-    seed ``current_seed + pid``, θ drawn once from the driver RNG, clusters
-    migrated to the partition of their new entity values — but without the
+    Same chain as :func:`transition` — per-partition kernels with seed
+    ``current_seed + pid``, θ drawn once from the driver RNG, clusters
+    migrated to the partition of their new entity values — without the
     per-iteration Spark job: kernels run sequentially on cached numpy
-    states and migration is an in-memory split+concat
-    (``model.split_partition_state`` / ``concat_partition_states``).
-
-    The kernels canonicalize on entry, so a chain advanced locally produces
-    the SAME cluster content as the Spark ``applyInPandas`` execution
-    (pinned by tests/test_er_mcmc.py::test_local_vs_spark_multi_partition);
-    float log-likelihood sums match bit-exactly for ≤2 partitions (IEEE
-    addition is commutative) and to reordering rounding beyond that.
+    states and migration is an in-memory split + concat. Float
+    log-likelihood sums match the Spark executor bit-exactly for ≤2
+    partitions (IEEE addition is commutative) and to reordering rounding
+    beyond that (pinned by tests/test_er_mcmc.py::test_executor_parity).
 
     Use when the whole state comfortably fits on the driver — the sampler
-    gates it on total record count. The Spark path remains the execution
-    strategy at scale; this removes the ~1.5 s/iteration job floor that
-    dominates driver-sized problems (the reference runs these workloads on
-    local[1], docs/guide.md:132-141).
-    """
-    _require_live(state, "transition_local")
-    cache = state.cache
-    num_attrs = cache.num_attributes
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
-    parts = state.local_parts
-    if parts is None:
-        parts = _df_to_local_parts(state.df, num_attrs)
-    P = state.num_partitions
-
-    from dblink_spark.er.model import concat_partition_states, split_partition_state
-
-    swept: dict[int, PartitionState] = {}
-    for pid in sorted(parts):
-        swept[pid] = run_fused_sweeps(
-            parts[pid], cache, theta, mode, state.current_seed, P, pid, 1
-        )
-
-    # summaries on the post-sweep, pre-migration states (what the Spark
-    # kernel emits as in-band rows), reduced in pid order
-    A, Fn = num_attrs, len(cache.file_ids)
-    loglik, n_iso = 0.0, 0
-    agg = np.zeros(A * Fn, dtype=np.int64)
-    hist = np.zeros(A + 1, dtype=np.int64)
-    for pid in sorted(swept):
-        ll, ni, ag, hs = partition_summary(swept[pid], cache)
-        loglik += ll
-        n_iso += int(ni)
-        agg += ag
-        hist += hs
-    summary = SummaryVars(
-        num_isolates=n_iso,
-        log_likelihood=float(loglik),
-        agg_distortions=agg.reshape(A, Fn),
-        rec_distortions=hist,
-    )
-
-    # migrate clusters to the partition of their new entity values
-    buckets: dict[int, list[PartitionState]] = {}
-    for pid in sorted(swept):
-        ps = swept[pid]
-        for t, sub in split_partition_state(
-            ps, state.partition_fn(ps.entities)
-        ).items():
-            buckets.setdefault(t, []).append(sub)
-    migrated = {t: concat_partition_states(subs) for t, subs in buckets.items()}
-
-    # never release the chain ROOT (iteration 0): init states are
-    # legitimately reused as fork points (part.fit(s0.df) after a
-    # warm fused transition; multi-partitioning sweeps); from
-    # iteration 1 on the predecessor is genuinely retired chain state
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
-    )
-    new_state = replace(
-        state,
-        iteration=state.iteration + 1,
-        _df=None,
-        block_df=None,
-        local_parts=migrated,
-        theta=theta,
-        summary=summary,
-        current_seed=state.current_seed + P,
-    )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
+    gates it on total record count. The Spark executor remains the
+    strategy at scale; this removes the per-iteration job floor that
+    dominates driver-sized problems."""
+    return _advance(state, mode, 1, local=True)
 
 
 class PartitionBudgetError(RuntimeError):
@@ -1744,21 +1414,7 @@ def collect_summary(state_df: DataFrame, cache: RecordsCache) -> SummaryVars:
     rows = state_df.filter(F.col("is_summary")).select(
         "loglik", "n_isolates", "agg_dist", "rec_dist_hist"
     ).collect()
-    A = cache.num_attributes
-    Fn = len(cache.file_ids)
-    loglik = sum(r["loglik"] for r in rows)
-    n_iso = sum(r["n_isolates"] for r in rows)
-    agg = np.zeros(A * Fn, dtype=np.int64)
-    hist = np.zeros(A + 1, dtype=np.int64)
-    for r in rows:
-        agg += np.array(r["agg_dist"], dtype=np.int64)
-        hist += np.array(r["rec_dist_hist"], dtype=np.int64)
-    return SummaryVars(
-        num_isolates=int(n_iso),
-        log_likelihood=float(loglik),
-        agg_distortions=agg.reshape(A, Fn),
-        rec_distortions=hist,
-    )
+    return _reduce_summaries((tuple(r) for r in rows), cache)
 
 
 def prior_log_likelihood_term(

@@ -1463,8 +1463,7 @@ def q_docs_dedup_bias_audit(
             comps = bottomk_components(d, k=8, threshold=0.99)
         else:
             # seam arm: saved pair tables round-trip the distinct output
-            # r17: pre_contract measured SLOWER here (job-floor-bound closure;
-            # see dedup_components' seam note) — left at the fastest shape
+            # a pre-closure min-neighbor contraction measured slower here (1b2312a)
             comps = connected_components(
                 pairs, "doc1", "doc2", assume_distinct=True
             )

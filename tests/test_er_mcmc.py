@@ -246,12 +246,13 @@ def test_kernel_row_order_independence(spark, rl_setup):
     permutation of entities AND records must produce a bit-identical chain,
     because run_fused_sweeps canonicalizes on entry."""
     from dblink_spark.er.model import PartitionState
-    from dblink_spark.er.state import _pdf_to_partition_state, run_fused_sweeps
+    from dblink_spark.er.state import _pa_to_partition_state, run_fused_sweeps
 
     records, attrs, cache, pdf = rl_setup
     state = init_state(spark, records, cache, SinglePartition(), 1, seed=7)
-    sdf = state.df.toPandas()
-    ps = _pdf_to_partition_state(sdf[~sdf["is_summary"]], cache.num_attributes)
+    ps = _pa_to_partition_state(
+        state.df.filter("NOT is_summary").toArrow(), cache.num_attributes
+    )
 
     prng = np.random.default_rng(0)
     eperm = prng.permutation(ps.num_entities)
@@ -275,86 +276,104 @@ def test_kernel_row_order_independence(spark, rl_setup):
     assert (out1.rec_dist == out2.rec_dist).all()
 
 
-def test_local_vs_spark_multi_partition(spark, rl_setup):
-    """transition_local must produce the SAME chain as the Spark
-    applyInPandas transition on a 2-partition KD-tree state: kernels
-    canonicalize on entry, seeds are data-keyed, and migration follows the
-    same partition function — so cluster content, θ, log-likelihood (2
-    terms: IEEE-commutative), and distortion counts match exactly."""
-    from dblink_spark.er.state import assign_partitions, transition_local
-
-    records, attrs, cache, pdf = rl_setup
-
-    def mk():
-        st = init_state(spark, records, cache, SinglePartition(), 1, seed=17)
-        part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
-        part.fit(st.df.filter("NOT is_summary").select("ent_values"))
-        return assign_partitions(st, part, 2)
-
-    s_loc, s_spk = mk(), mk()
-    for _ in range(3):
-        s_loc = transition_local(s_loc, "PCG-I")
-    for _ in range(3):
-        s_spk = transition(s_spk, "PCG-I")
-
-    assert s_loc.iteration == s_spk.iteration == 3
-    assert s_loc.current_seed == s_spk.current_seed
-    assert (s_loc.theta == s_spk.theta).all()
-    assert s_loc.summary.log_likelihood == s_spk.summary.log_likelihood
-    assert (s_loc.summary.agg_distortions == s_spk.summary.agg_distortions).all()
-    assert s_loc.summary.num_isolates == s_spk.summary.num_isolates
-
-    def links(st):
-        rows = st.df.filter("NOT is_summary").collect()
-        return sorted(
+def _chain_facts(st):
+    """Everything two executors must agree on after a step: iteration,
+    seed, θ, the summary (log-likelihood compared with ``==``) and the
+    sorted linkage rows. Taken before the state is advanced (advancing
+    consumes it)."""
+    rows = st.df.filter("NOT is_summary").collect()
+    return {
+        "iteration": st.iteration,
+        "current_seed": st.current_seed,
+        "theta": st.theta.tolist(),
+        "log_likelihood": st.summary.log_likelihood,
+        "agg_distortions": st.summary.agg_distortions.tolist(),
+        "num_isolates": st.summary.num_isolates,
+        "links": sorted(
             (r["partition_id"], r["ent_values"], sorted(r["rec_ids"]))
             for r in rows
-        )
-
-    assert links(s_loc) == links(s_spk)
-    _check_invariants(s_loc, len(pdf), len(pdf))
-    # both partitions still populated after local migration
-    pids = {r[0] for r in links(s_loc)}
-    assert pids == {0, 1}
-    # a local chain can hand back to the Spark path mid-stream
-    s_mix = transition(s_loc, "PCG-I")
-    s_ref = transition_local(s_spk, "PCG-I")
-    assert s_mix.summary.log_likelihood == s_ref.summary.log_likelihood
-    assert links(s_mix) == links(s_ref)
+        ),
+    }
 
 
-def test_fused_local_vs_spark_bit_parity(spark, rl_setup):
-    """transition_fused(local=True) must produce the SAME chain as the
-    applyInPandas execution (local=False): both run run_fused_sweeps with
-    identical seeds, so linkage structure, θ, log-likelihood, and distortion
-    counts are bit-identical. Guards the driver-local fast path against
-    drifting from the distributed kernel."""
-    from dblink_spark.er.state import transition_fused
-
+def _parity_start(spark, rl_setup, p):
     records, attrs, cache, pdf = rl_setup
-    s_loc = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
-    s_spk = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
-    s_loc = transition_fused(s_loc, "PCG-I", 4, local=True)
-    s_loc = transition_fused(s_loc, "PCG-I", 3, local=True)  # local→local continuation
-    s_spk = transition_fused(s_spk, "PCG-I", 4, local=False)
-    s_spk = transition_fused(s_spk, "PCG-I", 3, local=False)
+    st = init_state(spark, records, cache, SinglePartition(), 1, seed=17)
+    if p == 1:
+        return st
+    part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
+    part.fit(st.df.filter("NOT is_summary").select("ent_values"))
+    return assign_partitions(st, part, 2)
 
-    assert s_loc.iteration == s_spk.iteration == 7
-    assert s_loc.current_seed == s_spk.current_seed
-    assert (s_loc.theta == s_spk.theta).all()
-    assert s_loc.summary.log_likelihood == s_spk.summary.log_likelihood
-    assert (s_loc.summary.agg_distortions == s_spk.summary.agg_distortions).all()
-    assert s_loc.summary.num_isolates == s_spk.summary.num_isolates
 
-    def links(st):
-        rows = st.df.filter("NOT is_summary AND size(rec_ids) > 0").collect()
-        return sorted(
-            (r["ent_values"], sorted(r["rec_ids"])) for r in rows
+def _public_step(p, k, executor):
+    """One step of ``k`` sweeps on ``executor`` through the entry point a
+    caller uses for it (the local multi-partition multisweep has none, so
+    it calls the shared core)."""
+    from dblink_spark.er.state import (
+        _advance, transition_fused, transition_local, transition_multisweep,
+    )
+
+    local = executor == "local"
+    if p == 1:
+        return lambda s: transition_fused(s, "PCG-I", k, local=local)
+    if k == 1:
+        return (
+            (lambda s: transition_local(s, "PCG-I")) if local
+            else (lambda s: transition(s, "PCG-I"))
         )
+    if local:
+        return lambda s: _advance(s, "PCG-I", k, local=True)
+    return lambda s: transition_multisweep(s, "PCG-I", k)
 
-    assert links(s_loc) == links(s_spk)
-    # lazy DataFrame view materialized from local state must keep invariants
-    _check_invariants(s_loc, len(pdf), len(pdf))
+
+#: reference chain facts per (p, k), shared across executor params
+_PARITY_REFERENCE: dict = {}
+
+
+def _parity_reference(spark, rl_setup, p, k):
+    """Three Spark steps: ``transition_fused(local=False)`` at p=1,
+    ``transition_multisweep(k)`` at p=2 (so k=1 also pins multisweep(1)
+    against ``transition``)."""
+    from dblink_spark.er.state import transition_fused, transition_multisweep
+
+    if (p, k) not in _PARITY_REFERENCE:
+        if p == 1:
+            step = lambda s: transition_fused(s, "PCG-I", k, local=False)  # noqa: E731
+        else:
+            step = lambda s: transition_multisweep(s, "PCG-I", k)  # noqa: E731
+        s = _parity_start(spark, rl_setup, p)
+        facts = []
+        for _ in range(3):
+            s = step(s)
+            facts.append(_chain_facts(s))
+        _PARITY_REFERENCE[(p, k)] = facts
+    return _PARITY_REFERENCE[(p, k)]
+
+
+@pytest.mark.parametrize("k", [1, 3])
+@pytest.mark.parametrize("p", [1, 2])
+@pytest.mark.parametrize("executor", ["local", "spark"])
+def test_executor_parity(spark, rl_setup, executor, p, k):
+    """Both executors of the transition core produce the SAME chain: two
+    steps on ``executor`` then one on the other executor (a hand-off in
+    either direction) match three Spark reference steps in θ, seed,
+    log-likelihood (``==``; ≤2 partition terms are IEEE-commutative),
+    distortion counts, isolates and linkage rows. Kernels canonicalize on
+    entry, seeds are data-keyed and migration follows the same partition
+    function, so nothing may differ."""
+    records, attrs, cache, pdf = rl_setup
+    ref = _parity_reference(spark, rl_setup, p, k)
+    other = "spark" if executor == "local" else "local"
+    s = _parity_start(spark, rl_setup, p)
+    for i, ex in enumerate([executor, executor, other]):
+        s = _public_step(p, k, ex)(s)
+        assert (s.local_parts is not None) == (ex == "local")
+        assert _chain_facts(s) == ref[i], f"step {i + 1} on {ex}"
+    assert s.iteration == 3 * k
+    _check_invariants(s, len(pdf), len(pdf))
+    if p == 2:  # both partitions still populated after migration
+        assert {r[0] for r in ref[-1]["links"]} == {0, 1}
 
 
 def test_init_state_rejects_duplicate_rec_ids(spark, rl_setup):
@@ -494,45 +513,6 @@ def test_salt_expr_cache_keyed_by_live_context(spark):
         .count()
     )
     assert buckets == 4
-
-
-def test_multisweep_k1_bit_parity_with_transition(spark, rl_setup):
-    """r14 (VERDICT task 3): transition_multisweep(k=1) must be
-    BIT-IDENTICAL to transition() on a 2-partition chain — same θ RNG
-    cadence, same kernel seeds, same migration — so the fused variant's
-    only differences are the documented k>1 relaxations."""
-    from dblink_spark.er.state import assign_partitions, transition_multisweep
-
-    records, attrs, cache, pdf = rl_setup
-
-    def mk():
-        st = init_state(spark, records, cache, SinglePartition(), 1, seed=17)
-        part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
-        part.fit(st.df.filter("NOT is_summary").select("ent_values"))
-        return assign_partitions(st, part, 2)
-
-    s_one, s_multi = mk(), mk()
-    for _ in range(3):
-        s_one = transition(s_one, "PCG-I")
-    for _ in range(3):
-        s_multi = transition_multisweep(s_multi, "PCG-I", 1)
-
-    assert s_multi.iteration == s_one.iteration == 3
-    assert s_multi.current_seed == s_one.current_seed
-    assert (s_multi.theta == s_one.theta).all()
-    assert s_multi.summary.log_likelihood == s_one.summary.log_likelihood
-    assert (
-        s_multi.summary.agg_distortions == s_one.summary.agg_distortions
-    ).all()
-
-    def links(st):
-        rows = st.df.filter("NOT is_summary").collect()
-        return sorted(
-            (r["partition_id"], r["ent_values"], sorted(r["rec_ids"]))
-            for r in rows
-        )
-
-    assert links(s_multi) == links(s_one)
 
 
 def test_multisweep_k3_invariants_and_determinism(spark, rl_setup):

@@ -104,25 +104,25 @@ def main() -> None:
         )
     print(f"scan+shuffle (no python): {t:.3f}s")
 
+    def identity_step():
+        kernel = st.make_transition_kernel_arrow(
+            st._cache_ref(s, df_in), s.theta, "PCG-I", s.current_seed,
+            s.partition_fn, num_partitions=p,
+        )
+        return df_in.groupBy(*keys).applyInArrow(kernel, st.BLOCK_SCHEMA)
+
     # 3. identity kernel, NO localCheckpoint
     real = st.run_fused_sweeps
     st.run_fused_sweeps = lambda ps, *a, **k: ps
     try:
         with st._kernel_exec_conf(spark, shuffle_partitions=p):
-            new_df, _ = st._apply_kernel_grouped(
-                df_in, keys, st._cache_ref(s, df_in), s.theta, "PCG-I", s.current_seed,
-                s.partition_fn, num_partitions=p,
-            )
+            new_df = identity_step()
             t = timeit(lambda: st.collect_summary(new_df, cache))
             print(f"scan+shuffle+python round-trip (no checkpoint): {t:.3f}s")
 
             # 4. + localCheckpoint (the full identity transition body)
             def full():
-                nd, _ = st._apply_kernel_grouped(
-                    df_in, keys, st._cache_ref(s, df_in), s.theta, "PCG-I", s.current_seed,
-                    s.partition_fn, num_partitions=p,
-                )
-                nd = nd.localCheckpoint(eager=False)
+                nd = identity_step().localCheckpoint(eager=False)
                 st.collect_summary(nd, cache)
 
             t = timeit(full)
