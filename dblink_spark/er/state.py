@@ -207,8 +207,7 @@ class State:
             self._df = _blocks_df_to_cluster_df(
                 self.block_df, self.cache.num_attributes
             )
-            return self._df
-        if self._df is None:
+        elif self._df is None:
             # Arrow-native marshal (createDataFrame accepts a pyarrow
             # Table): no per-row Python lists
             tbl = pa.concat_tables(

@@ -327,34 +327,37 @@ def _public_step(p, k, executor):
     return lambda s: transition_multisweep(s, "PCG-I", k)
 
 
-#: reference chain facts per (p, k), shared across executor params
-_PARITY_REFERENCE: dict = {}
-
-
-def _parity_reference(spark, rl_setup, p, k):
-    """Three Spark steps: ``transition_fused(local=False)`` at p=1,
-    ``transition_multisweep(k)`` at p=2 (so k=1 also pins multisweep(1)
-    against ``transition``)."""
+@pytest.fixture(scope="module")
+def parity_reference(spark, rl_setup):
+    """``(p, k) -> facts`` after each of three Spark reference steps:
+    ``transition_fused(local=False)`` at p=1, ``transition_multisweep(k)``
+    at p=2 (so k=1 also pins multisweep(1) against ``transition``).
+    Memoized for the module: every executor param compares to one run."""
     from dblink_spark.er.state import transition_fused, transition_multisweep
 
-    if (p, k) not in _PARITY_REFERENCE:
-        if p == 1:
-            step = lambda s: transition_fused(s, "PCG-I", k, local=False)  # noqa: E731
-        else:
-            step = lambda s: transition_multisweep(s, "PCG-I", k)  # noqa: E731
-        s = _parity_start(spark, rl_setup, p)
-        facts = []
-        for _ in range(3):
-            s = step(s)
-            facts.append(_chain_facts(s))
-        _PARITY_REFERENCE[(p, k)] = facts
-    return _PARITY_REFERENCE[(p, k)]
+    memo: dict = {}
+
+    def get(p, k):
+        if (p, k) not in memo:
+            if p == 1:
+                step = lambda s: transition_fused(s, "PCG-I", k, local=False)  # noqa: E731
+            else:
+                step = lambda s: transition_multisweep(s, "PCG-I", k)  # noqa: E731
+            s = _parity_start(spark, rl_setup, p)
+            facts = []
+            for _ in range(3):
+                s = step(s)
+                facts.append(_chain_facts(s))
+            memo[(p, k)] = facts
+        return memo[(p, k)]
+
+    return get
 
 
 @pytest.mark.parametrize("k", [1, 3])
 @pytest.mark.parametrize("p", [1, 2])
 @pytest.mark.parametrize("executor", ["local", "spark"])
-def test_executor_parity(spark, rl_setup, executor, p, k):
+def test_executor_parity(spark, rl_setup, parity_reference, executor, p, k):
     """Both executors of the transition core produce the SAME chain: two
     steps on ``executor`` then one on the other executor (a hand-off in
     either direction) match three Spark reference steps in θ, seed,
@@ -363,7 +366,7 @@ def test_executor_parity(spark, rl_setup, executor, p, k):
     entry, seeds are data-keyed and migration follows the same partition
     function, so nothing may differ."""
     records, attrs, cache, pdf = rl_setup
-    ref = _parity_reference(spark, rl_setup, p, k)
+    ref = parity_reference(p, k)
     other = "spark" if executor == "local" else "local"
     s = _parity_start(spark, rl_setup, p)
     for i, ex in enumerate([executor, executor, other]):
