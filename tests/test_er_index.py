@@ -228,3 +228,89 @@ def test_bucketed_build_matches_local_at_float_boundaries(spark, threshold, max_
             ref.neighbor_expsims[v].tolist(), rel=1e-14
         )
     assert idx.sim_norms.tolist() == pytest.approx(ref.sim_norms.tolist(), rel=1e-14)
+
+
+#: (rec_id, file_id, fname, lname, year): two files, a null in every
+#: attribute, non-ASCII names in a Levenshtein attribute (their ids pin the
+#: code-point sort order), and a constant-similarity attribute
+CACHE_CORPUS = [
+    ("r1", "A", "Zoë", "Smith", "1950"),
+    ("r2", "A", "Zoe", "Smyth", "1950"),
+    ("r3", "A", "Åsa", None, "1951"),
+    ("r4", "A", "Asa", "Smith", None),
+    ("r5", "A", None, "Jones", "1951"),
+    ("r6", "B", "ß", "Jones", "1950"),
+    ("r7", "B", "ss", "Jonas", None),
+    ("r8", "B", "Zoë", "Smith", "1952"),
+    ("r9", "B", None, None, "1950"),
+    ("r10", "B", "Anna", "Åberg", "1951"),
+]
+
+
+def test_records_cache_matches_local_build(spark):
+    """The records cache equals the per-attribute index builds attribute by
+    attribute (value order, probs, neighbors, expSims, sim norms, precached
+    powers), and counts file sizes and missing values exactly."""
+    import pyspark.sql.functions as F
+
+    from dblink_spark.er.attributes import Attribute
+    from dblink_spark.er.cache import build_records_cache
+
+    records = spark.createDataFrame(
+        CACHE_CORPUS,
+        "rec_id string, file_id string, fname string, lname string, year string",
+    )
+    prior = BetaParams(1.0, 50.0)
+    attrs = [
+        Attribute("fname", LevenshteinSim(3.0, 10.0), prior),
+        Attribute("lname", LevenshteinSim(5.0, 10.0), prior),
+        Attribute("year", ConstantSim(), prior),
+    ]
+    powers = range(1, 4)
+    cache = build_records_cache(records, attrs, expected_max_cluster_size=3)
+
+    assert cache.file_sizes == {"A": 5, "B": 5}
+    assert cache.missing_counts == {
+        ("A", 0): 1, ("B", 0): 1, ("A", 1): 1, ("B", 1): 1,
+        ("A", 2): 1, ("B", 2): 1,
+    }
+    domains = [
+        {"Anna": 1.0, "Asa": 1.0, "Zoe": 1.0, "Zoë": 2.0, "ss": 1.0, "Åsa": 1.0,
+         "ß": 1.0},
+        {"Jonas": 1.0, "Jones": 2.0, "Smith": 3.0, "Smyth": 1.0, "Åberg": 1.0},
+        {"1950": 4.0, "1951": 3.0, "1952": 1.0},
+    ]
+    assert cache.indexes[0].values.tolist() == [
+        "Anna", "Asa", "Zoe", "Zoë", "ss", "Åsa", "ß"
+    ]
+    for attr, idx, dom in zip(attrs, cache.indexes, domains):
+        # bit-exact against the Spark build of the same domain
+        one = build_attribute_index(
+            records.select(F.col(attr.name).alias("value"))
+            .filter("value IS NOT NULL")
+            .groupBy("value")
+            .agg(F.count("*").cast("double").alias("weight")),
+            attr.sim_fn,
+            precache_powers=powers,
+        )
+        # exact on everything that does not go through exp(); JVM Math.exp
+        # and Python math.exp may differ in the last ulp (see above)
+        ref = build_attribute_index_local(dom, attr.sim_fn, precache_powers=powers)
+        assert idx.values.tolist() == one.values.tolist() == ref.values.tolist()
+        assert idx.probs.tolist() == one.probs.tolist() == ref.probs.tolist()
+        assert idx.is_constant == one.is_constant == ref.is_constant
+        assert sorted(idx.power_dists) == sorted(one.power_dists)
+        for k in powers:
+            got = idx.sim_norm_dist(k).tolist()
+            assert got == one.sim_norm_dist(k).tolist()
+            assert got == pytest.approx(ref.sim_norm_dist(k).tolist(), rel=1e-14)
+        if ref.is_constant:
+            continue
+        assert idx.sim_norms.tolist() == one.sim_norms.tolist()
+        assert idx.sim_norms.tolist() == pytest.approx(ref.sim_norms.tolist(), rel=1e-14)
+        for v in range(ref.num_values):
+            ids = idx.neighbor_ids[v].tolist()
+            exps = idx.neighbor_expsims[v].tolist()
+            assert ids == one.neighbor_ids[v].tolist() == ref.neighbor_ids[v].tolist()
+            assert exps == one.neighbor_expsims[v].tolist()
+            assert exps == pytest.approx(ref.neighbor_expsims[v].tolist(), rel=1e-14)
