@@ -1674,53 +1674,55 @@ def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
     # the file stream source requires a DIRECTORY; the fixtures are single
     # read-only files, so stage each behind a symlink in a temp dir (the
     # local filesystem lists through symlinks; no bytes are copied)
-    stage = tempfile.mkdtemp(prefix="bench_stream_src_")
-    for table in ("events", "documents"):
-        d = os.path.join(stage, table)
-        os.makedirs(d, exist_ok=True)
-        os.symlink(
-            os.path.join(sf_dir, f"{table}.parquet"),
-            os.path.join(d, "part-000.parquet"),
-        )
-
-    out = {}
-    best_sess = float("inf")
-    best_near = float("inf")
-    n_sess = n_near = 0
-    for rep in range(2):
-        spark.sparkContext.setJobDescription("bench: streaming sessionize")
-        table = f"bench_stream_sessions_{rep}"
-        t0 = time.monotonic()
-        run_to_memory_sink(
-            sessionize_stream(
-                read_event_stream(spark, os.path.join(stage, "events"))
-            ),
-            table,
-        )
-        best_sess = min(best_sess, time.monotonic() - t0)
-        n_sess = spark.table(table).count()
-        spark.catalog.dropTempView(table)
-
-        spark.sparkContext.setJobDescription("bench: streaming near-dedup")
-        docs = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string, "
-                "n_chars bigint"
+    with tempfile.TemporaryDirectory(prefix="bench_stream_src_") as stage:
+        for table in ("events", "documents"):
+            d = os.path.join(stage, table)
+            os.makedirs(d, exist_ok=True)
+            os.symlink(
+                os.path.join(sf_dir, f"{table}.parquet"),
+                os.path.join(d, "part-000.parquet"),
             )
-            .format("parquet")
-            .load(os.path.join(stage, "documents"))
-            # a synthetic-but-deterministic arrival time: the fixture has
-            # no timestamp column and the watermark operator needs one
-            .selectExpr(
-                "*", "timestamp_micros(doc_id * 1000000) AS event_time"
+        # the stream reads the fixture's own schema (one footer read), so a
+        # drifted fixture fails the drain instead of mismatching a literal
+        docs_schema = spark.read.parquet(
+            os.path.join(sf_dir, "documents.parquet")
+        ).schema
+
+        out = {}
+        best_sess = float("inf")
+        best_near = float("inf")
+        n_sess = n_near = 0
+        for rep in range(2):
+            spark.sparkContext.setJobDescription("bench: streaming sessionize")
+            table = f"bench_stream_sessions_{rep}"
+            t0 = time.monotonic()
+            run_to_memory_sink(
+                sessionize_stream(
+                    read_event_stream(spark, os.path.join(stage, "events"))
+                ),
+                table,
             )
-        )
-        table = f"bench_stream_neardup_{rep}"
-        t0 = time.monotonic()
-        run_to_memory_sink(near_dedup_doc_stream_banded(docs), table)
-        best_near = min(best_near, time.monotonic() - t0)
-        n_near = spark.table(table).count()
-        spark.catalog.dropTempView(table)
+            best_sess = min(best_sess, time.monotonic() - t0)
+            n_sess = spark.table(table).count()
+            spark.catalog.dropTempView(table)
+
+            spark.sparkContext.setJobDescription("bench: streaming near-dedup")
+            docs = (
+                spark.readStream.schema(docs_schema)
+                .format("parquet")
+                .load(os.path.join(stage, "documents"))
+                # a synthetic-but-deterministic arrival time: the fixture has
+                # no timestamp column and the watermark operator needs one
+                .selectExpr(
+                    "*", "timestamp_micros(doc_id * 1000000) AS event_time"
+                )
+            )
+            table = f"bench_stream_neardup_{rep}"
+            t0 = time.monotonic()
+            run_to_memory_sink(near_dedup_doc_stream_banded(docs), table)
+            best_near = min(best_near, time.monotonic() - t0)
+            n_near = spark.table(table).count()
+            spark.catalog.dropTempView(table)
     spark.sparkContext.setJobDescription(None)
     out["streaming_sessionize_sec"] = round(best_sess, 3)
     out["streaming_neardup_sec"] = round(best_near, 3)

@@ -6,12 +6,17 @@ missing counts in a single RDD foreach with map-accumulators
 string→id map (ref: RecordsCache.scala:120-134).
 
 Spark-first rebuild:
-- statistics are DataFrame aggregations (whole-stage codegen, map-side
-  partial aggregation — the accumulator pattern is exactly what Catalyst
-  generates for groupBy().count());
-- dictionary encoding is a broadcast hash join per attribute against the
-  per-attribute dimension table (value, id), missing → -1 via coalesce.
-  All joins fuse into one stage; nothing leaves the JVM.
+- statistics are ONE stacked aggregation: the matching attributes are
+  unpivoted to (file_id, attr, value) rows and counted per triple (map-side
+  partial aggregation — the accumulator pattern). The Σ files × Σ |domain|
+  result rows come back once through Arrow; file sizes, missing counts (the
+  null rows) and each attribute's sorted domain with its weights are
+  finished in numpy on the driver;
+- the neighbour pairs of every Levenshtein attribute come back in one more
+  job (`index.build_attribute_indexes`);
+- dictionary encoding is the reference's value→id map: one narrow
+  mapInArrow looks every attribute value up in its index's sorted value
+  array, missing → -1. No join, no shuffle.
 
 The resulting `RecordsCache` (attribute indexes + file sizes) is a small
 Python object broadcast into the MCMC kernels.
@@ -21,11 +26,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from dblink_spark.er.attributes import Attribute, BetaParams
-from dblink_spark.er.index import AttributeIndex, build_attribute_index
+from dblink_spark.er.index import AttributeIndex, build_attribute_indexes
+from dblink_spark.operators.workerboot import make_worker_boot
 
 
 @dataclass
@@ -61,35 +70,48 @@ def build_records_cache(
     `records` schema: rec_id string, file_id string, and one string column
     per matching attribute (nulls = missing).
     """
-    attr_names = [a.name for a in attributes]
+    stacked = records.select(
+        "file_id",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("attr"), F.col(a.name).cast("string").alias("value")
+                    )
+                    for i, a in enumerate(attributes)
+                ]
+            )
+        ),
+    )
+    tbl = stacked.groupBy("file_id", "attr", "value").count().toArrow()
+    fids = np.array(tbl.column("file_id").to_pylist(), dtype=object)
+    attr_ids = tbl.column("attr").to_numpy(zero_copy_only=False)
+    values = np.array(tbl.column("value").to_pylist(), dtype=object)
+    counts = tbl.column("count").to_numpy(zero_copy_only=False)
+    missing = tbl.column("value").is_null().to_numpy(zero_copy_only=False)
 
-    # per-file sizes + per-(file, attr) missing counts in ONE aggregation job
-    agg_exprs = [F.count("*").alias("__n")]
-    for i, name in enumerate(attr_names):
-        agg_exprs.append(
-            F.sum(F.when(F.col(name).isNull(), 1).otherwise(0)).alias(f"__miss_{i}")
-        )
-    stats = records.groupBy("file_id").agg(*agg_exprs).collect()
-    file_sizes = {r["file_id"]: r["__n"] for r in stats}
+    # every record contributes exactly one row per attribute
+    first = attr_ids == 0
+    file_keys, inv = np.unique(fids[first], return_inverse=True)
+    file_sizes = {
+        f: int(n) for f, n in zip(file_keys.tolist(), np.bincount(inv, weights=counts[first]))
+    }
     missing_counts = {
-        (r["file_id"], i): r[f"__miss_{i}"]
-        for r in stats
-        for i in range(len(attr_names))
-        if r[f"__miss_{i}"]
+        (f, int(a)): int(n)
+        for f, a, n in zip(fids[missing], attr_ids[missing], counts[missing])
     }
 
-    # per-attribute domains: one groupBy-count per attribute (jobs run over
-    # the cached records projection; each is a single shuffle of |domain| rows)
-    indexes = []
-    powers = range(1, expected_max_cluster_size + 1)
-    for attr in attributes:
-        dom = (
-            records.select(F.col(attr.name).alias("value"))
-            .filter(F.col("value").isNotNull())
-            .groupBy("value")
-            .agg(F.count("*").cast("double").alias("weight"))
-        )
-        indexes.append(build_attribute_index(dom, attr.sim_fn, precache_powers=powers))
+    # per-attribute domains, ids by sorted value: numpy sorts str objects by
+    # code point, the same order as Spark's UTF-8 binary orderBy
+    domains = []
+    for i, attr in enumerate(attributes):
+        mine = (attr_ids == i) & ~missing
+        dom, inv = np.unique(values[mine], return_inverse=True)
+        weights = np.bincount(inv, weights=counts[mine], minlength=len(dom))
+        domains.append((dom, weights, attr.sim_fn))
+    indexes = build_attribute_indexes(
+        records.sparkSession, domains, range(1, expected_max_cluster_size + 1)
+    )
 
     return RecordsCache(
         attributes=attributes,
@@ -103,26 +125,41 @@ def encode_records(records: DataFrame, cache: RecordsCache) -> DataFrame:
     """Dictionary-encode record attribute values to dense int ids.
 
     Returns: rec_id string, file_id string, values array<int> (missing = -1).
-    Encoding joins are broadcast hash joins against tiny dimension tables
-    (ref semantics: RecordsCache.scala:120-134, valueIdxOf per attribute).
+    One narrow mapInArrow: a value's id is its position in the index's
+    sorted value array (the `_value_to_id` map), found with Arrow's hash
+    lookup (ref semantics: RecordsCache.scala:120-134, valueIdxOf per
+    attribute).
     """
-    spark = records.sparkSession
-    out = records
-    id_cols = []
-    for attr_id, (attr, idx) in enumerate(zip(cache.attributes, cache.indexes)):
-        dim = spark.createDataFrame(
-            [(str(v), int(i)) for i, v in enumerate(idx.values)],
-            f"__v_{attr_id} string, __id_{attr_id} int",
-        )
-        out = out.join(
-            F.broadcast(dim), on=out[attr.name] == dim[f"__v_{attr_id}"], how="left"
-        )
-        id_cols.append(F.coalesce(F.col(f"__id_{attr_id}"), F.lit(-1)))
-    return out.select(
-        F.col("rec_id").cast("string").alias("rec_id"),
-        F.col("file_id").cast("string").alias("file_id"),
-        F.array(*id_cols).alias("values"),
-    )
+    value_sets = [pa.array(idx.values.tolist(), pa.string()) for idx in cache.indexes]
+    num_attrs = len(value_sets)
+    boot = make_worker_boot()
+
+    def encode(batches):
+        boot()  # operators/workerboot.py
+        for batch in batches:
+            n = batch.num_rows
+            ids = np.empty((n, num_attrs), dtype=np.int32)
+            for a, value_set in enumerate(value_sets):
+                ids[:, a] = (
+                    pc.index_in(batch.column(2 + a), value_set=value_set)
+                    .fill_null(-1)
+                    .to_numpy(zero_copy_only=False)
+                )
+            offsets = pa.array(np.arange(0, n * num_attrs + 1, num_attrs, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    batch.column(1),
+                    pa.ListArray.from_arrays(offsets, pa.array(ids.ravel())),
+                ],
+                names=["rec_id", "file_id", "values"],
+            )
+
+    return records.select(
+        F.col("rec_id").cast("string"),
+        F.col("file_id").cast("string"),
+        *[F.col(a.name).cast("string") for a in cache.attributes],
+    ).mapInArrow(encode, "rec_id string, file_id string, values array<int>")
 
 
 def with_file_id(records: DataFrame, file_id_col: str | None) -> DataFrame:

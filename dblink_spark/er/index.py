@@ -10,14 +10,16 @@ Semantics mirror the reference (ref: AttributeIndex.scala:106-245):
 - sim_norm(v) = 1 / sum_w p(w) * expSim(w, v);
 - power distribution k: p(v) * sim_norm(v)^k, normalized.
 
-The *build* is Spark-first: domain + weights come from a groupBy agg, and the
-all-pairs similarity comes from a crossJoin using the JVM-side
-`F.levenshtein`, pre-pruned by a length-band bound (|len(a)-len(b)| lower-
-bounds the edit distance) so the quadratic work only touches pairs that can
-clear the threshold. The reference does an unpruned RDD cartesian
-(ref: AttributeIndex.scala:219-231). The finished index is a small numpy
-container broadcast to executors — same distribution story as the reference's
-broadcast RecordsCache.
+The *build* is Spark-first: the all-pairs similarity comes from a self-join
+using the JVM-side `F.levenshtein`, pre-pruned by a length-band bound
+(|len(a)-len(b)| lower-bounds the edit distance) so the quadratic work only
+touches pairs that can clear the threshold. The reference does an unpruned
+RDD cartesian (ref: AttributeIndex.scala:219-231). The pair frames of all
+non-constant attributes are unioned and collected in ONE Spark job; the CSR
+grouping, normalizations and power distributions are finished in numpy on
+the driver. The finished index is a small numpy container broadcast to
+executors — same distribution story as the reference's broadcast
+RecordsCache.
 """
 
 from __future__ import annotations
@@ -25,10 +27,11 @@ from __future__ import annotations
 import bisect
 import math
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from dblink_spark.er.attributes import SimilarityFn
 
@@ -164,34 +167,16 @@ class AttributeIndex:
             self._value_to_id.update({v: i for i, v in enumerate(self.values.tolist())})
 
 
-def build_attribute_index(
-    domain_weights: DataFrame,
-    sim_fn: SimilarityFn,
-    precache_powers=None,
-) -> AttributeIndex:
-    """Build an AttributeIndex from a (value string, weight double) DataFrame.
+def _neighbor_pairs_frame(
+    spark: SparkSession, values: np.ndarray, sim_fn: SimilarityFn
+) -> DataFrame:
+    """(a_id int, b_id int, exp_sim double) for every ordered pair of the
+    sorted domain ``values`` whose truncated similarity is positive.
 
-    The neighbor computation is a self crossJoin with a length-band prune
-    pushed *before* `F.levenshtein`, then a threshold filter — Catalyst plans
-    the whole thing; only surviving (a_id, b_id, expSim) triples reach the
-    driver.
+    A self-join with a length-band prune pushed *before* `F.levenshtein`,
+    then a threshold filter — Catalyst plans the whole thing; only the
+    surviving triples leave the JVM.
     """
-    dom = (
-        domain_weights.groupBy("value")
-        .agg(F.sum("weight").alias("weight"))
-        .orderBy("value")
-        .collect()
-    )
-    if not dom:
-        raise ValueError("index cannot be empty")
-    values = np.array([r["value"] for r in dom], dtype=object)
-    weights = np.array([r["weight"] for r in dom], dtype=np.float64)
-    probs = weights / weights.sum()
-
-    if sim_fn.is_constant:
-        return AttributeIndex(values=values, probs=probs, is_constant=True)
-
-    spark = domain_weights.sparkSession
     dom_df = spark.createDataFrame(
         [(int(i), str(v)) for i, v in enumerate(values)], "id int, value string"
     )
@@ -246,39 +231,100 @@ def build_attribute_index(
                 F.col("a_pk"), F.col("b_pk"), F.length("a_value"), F.length("b_value")
             )
         )
-    pairs_df = (
+    return (
         pairs_df.withColumn("sim", sim_fn.column(F.col("a_value"), F.col("b_value")))
         .filter(F.col("sim") > 0.0)
         .select("a_id", "b_id", F.exp("sim").alias("exp_sim"))
     )
-    # Arrow transfer + vectorized CSR grouping: a realistic domain survives
-    # millions of neighbor pairs (1.85M for the 1M-record RLdata fname
-    # domain) and a per-Row Python loop dominated the whole index build;
-    # lexsort + bincount does the same grouping in ~100 ms. Per-a blocks
-    # are sorted by b_id exactly as the per-value argsort produced.
-    tbl = pairs_df.toArrow()
-    a_ids = np.asarray(tbl.column("a_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-    b_ids = np.asarray(tbl.column("b_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-    sims = np.asarray(tbl.column("exp_sim").to_numpy(zero_copy_only=False), dtype=np.float64)
-    order = np.lexsort((b_ids, a_ids))
-    a_ids, b_ids, sims = a_ids[order], b_ids[order], sims[order]
-    offsets = np.concatenate(
-        ([0], np.cumsum(np.bincount(a_ids, minlength=len(values))))
-    )
-    neighbor_ids = [
-        b_ids[offsets[v]: offsets[v + 1]] for v in range(len(values))
-    ]
-    neighbor_expsims = [
-        sims[offsets[v]: offsets[v + 1]] for v in range(len(values))
-    ]
 
+
+def build_attribute_indexes(
+    spark: SparkSession,
+    domains: list[tuple[np.ndarray, np.ndarray, SimilarityFn]],
+    precache_powers=None,
+) -> list[AttributeIndex]:
+    """One AttributeIndex per (sorted values, weights, sim_fn) domain.
+
+    The neighbor pairs of every non-constant domain come back in ONE Spark
+    job: each pair frame is tagged with its domain's position, the frames
+    are unioned, and the rows are split by tag on the driver.
+    """
+    for values, _, _ in domains:
+        if len(values) == 0:
+            raise ValueError("index cannot be empty")
+    frames = [
+        _neighbor_pairs_frame(spark, values, sim_fn).select(
+            F.lit(i).alias("attr"), "a_id", "b_id", "exp_sim"
+        )
+        for i, (values, _, sim_fn) in enumerate(domains)
+        if not sim_fn.is_constant
+    ]
+    if frames:
+        # Arrow transfer + vectorized CSR grouping: a realistic domain
+        # survives millions of neighbor pairs (1.85M for the 1M-record RLdata
+        # fname domain) and a per-Row Python loop dominated the whole index
+        # build; lexsort + bincount does the same grouping in ~100 ms.
+        tbl = reduce(DataFrame.unionByName, frames).toArrow()
+        tags = tbl.column("attr").to_numpy(zero_copy_only=False)
+        cols = [
+            np.asarray(tbl.column(c).to_numpy(zero_copy_only=False), dtype=dt)
+            for c, dt in (("a_id", np.int64), ("b_id", np.int64), ("exp_sim", np.float64))
+        ]
+
+    indexes = []
+    for i, (values, weights, sim_fn) in enumerate(domains):
+        probs = weights / weights.sum()
+        if sim_fn.is_constant:
+            indexes.append(AttributeIndex(values=values, probs=probs, is_constant=True))
+            continue
+        mine = tags == i
+        a_ids, b_ids, sims = (c[mine] for c in cols)
+        # per-a blocks sorted by b_id, exactly as a per-value argsort
+        order = np.lexsort((b_ids, a_ids))
+        a_ids, b_ids, sims = a_ids[order], b_ids[order], sims[order]
+        offsets = np.concatenate(
+            ([0], np.cumsum(np.bincount(a_ids, minlength=len(values))))
+        )
+        indexes.append(
+            _index_from_neighbors(
+                values,
+                probs,
+                [b_ids[offsets[v]: offsets[v + 1]] for v in range(len(values))],
+                [sims[offsets[v]: offsets[v + 1]] for v in range(len(values))],
+                precache_powers,
+            )
+        )
+    return indexes
+
+
+def build_attribute_index(
+    domain_weights: DataFrame,
+    sim_fn: SimilarityFn,
+    precache_powers=None,
+) -> AttributeIndex:
+    """Build an AttributeIndex from a (value string, weight double) DataFrame."""
+    dom = (
+        domain_weights.groupBy("value")
+        .agg(F.sum("weight").alias("weight"))
+        .orderBy("value")
+        .collect()
+    )
+    values = np.array([r["value"] for r in dom], dtype=object)
+    weights = np.array([r["weight"] for r in dom], dtype=np.float64)
+    return build_attribute_indexes(
+        domain_weights.sparkSession, [(values, weights, sim_fn)], precache_powers
+    )[0]
+
+
+def _index_from_neighbors(
+    values, probs, neighbor_ids, neighbor_expsims, precache_powers
+) -> AttributeIndex:
     # sim_norm(v) = 1 / (1 + sum_{w in nbr(v)} p(w) * (expSim(w,v) - 1))
     # (non-neighbors contribute p(w)*1, which sums to 1 - covered neighbors)
     sim_norms = np.empty(len(values), dtype=np.float64)
     for v in range(len(values)):
         extra = float(np.sum(probs[neighbor_ids[v]] * (neighbor_expsims[v] - 1.0)))
         sim_norms[v] = 1.0 / (1.0 + extra)
-
     idx = AttributeIndex(
         values=values,
         probs=probs,
@@ -321,18 +367,6 @@ def build_attribute_index_local(
                 sims.append(math.exp(s))
         neighbor_ids.append(np.array(ids, dtype=np.int64))
         neighbor_expsims.append(np.array(sims, dtype=np.float64))
-    sim_norms = np.empty(n, dtype=np.float64)
-    for v in range(n):
-        extra = float(np.sum(probs[neighbor_ids[v]] * (neighbor_expsims[v] - 1.0)))
-        sim_norms[v] = 1.0 / (1.0 + extra)
-    idx = AttributeIndex(
-        values=values,
-        probs=probs,
-        is_constant=False,
-        neighbor_ids=neighbor_ids,
-        neighbor_expsims=neighbor_expsims,
-        sim_norms=sim_norms,
+    return _index_from_neighbors(
+        values, probs, neighbor_ids, neighbor_expsims, precache_powers
     )
-    if precache_powers:
-        idx.precache_powers(precache_powers)
-    return idx

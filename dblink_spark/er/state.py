@@ -1665,11 +1665,10 @@ def init_state(
     agg = np.zeros((A, Fn), dtype=np.int64)
     for r in pairs:
         agg[r["pos"], r["fid"]] = r["count"]
-    n_iso = state_df.filter(
-        ~F.col("is_summary") & (F.size("rec_ids") == 0)
-    ).count()
     summary = SummaryVars(
-        num_isolates=int(n_iso),
+        # every entity below min(pop, n) holds a record: the fast path seeds
+        # one per record, and ridx % pop covers 0..pop-1 when pop < n
+        num_isolates=max(pop - n_records, 0),
         log_likelihood=float("nan"),
         agg_distortions=agg,
         rec_distortions=np.zeros(A + 1, dtype=np.int64),

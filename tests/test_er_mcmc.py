@@ -240,6 +240,43 @@ def test_init_population_smaller_than_records(spark, rl_setup):
     _check_invariants(st, n, pop)
 
 
+def test_encode_records_maps_values_and_nulls(spark, rl_setup):
+    """Missing values encode to -1; every other id decodes back to the
+    record's own value through the attribute index."""
+    from dblink_spark.er.cache import encode_records
+
+    records, attrs, cache, pdf = rl_setup
+    rows = encode_records(records, cache).collect()
+    assert len(rows) == len(pdf)
+    by_id = pdf.set_index("rec_id")
+    for r in rows:
+        assert r["file_id"] == "0"
+        src = by_id.loc[r["rec_id"]]
+        for a, (attr, idx) in enumerate(zip(attrs, cache.indexes)):
+            value = src[attr.name]
+            if value is None:
+                assert r["values"][a] == -1
+            else:
+                assert idx.values[r["values"][a]] == value
+    assert any(-1 in r["values"] for r in rows), "corpus must hold missing values"
+
+
+@pytest.mark.parametrize("pop_delta", [-50, 0, 50])
+def test_init_num_isolates_matches_state(spark, rl_setup, pop_delta):
+    """init_state's num_isolates (max(pop - n, 0) by construction) equals
+    the count of entities without records in the state it built."""
+    from pyspark.sql import functions as F
+
+    records, attrs, cache, pdf = rl_setup
+    pop = len(pdf) + pop_delta
+    state = init_state(spark, records, cache, SinglePartition(), 1, seed=61,
+                       population_size=pop)
+    empty = state.df.filter(
+        ~F.col("is_summary") & (F.size("rec_ids") == 0)
+    ).count()
+    assert state.summary.num_isolates == empty == max(pop_delta, 0)
+
+
 def test_kernel_row_order_independence(spark, rl_setup):
     """The chain must not depend on the order rows arrive at the kernel
     (shuffle fetch order is not guaranteed across retries/AQE): a random
@@ -807,6 +844,24 @@ def _jobs_in(spark, fn):
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_setup_job_counts(spark, rl_setup):
+    """Spark jobs the chain set-up launches, five each. The records cache
+    is the stacked statistics aggregation (AQE's shuffle-map job plus the
+    Arrow collect) and one neighbour-pair collect for both Levenshtein
+    attributes (one broadcast job each plus the collect). init_state is
+    the rec_id uniqueness check (two), the state checkpoint (one) and the
+    distortion-count collect (two). Before the single-pass cache and the
+    join-free encoder these were 26 and 12, here and on demo500."""
+    records, attrs, cache, pdf = rl_setup
+    _, cache_jobs = _jobs_in(
+        spark, lambda: build_records_cache(records, attrs, expected_max_cluster_size=10)
+    )
+    _, init_jobs = _jobs_in(
+        spark, lambda: init_state(spark, records, cache, SinglePartition(), 1, seed=59)
+    )
+    assert (cache_jobs, init_jobs) == (5, 5)
 
 
 def test_transition_job_counts(spark, rl_setup):
