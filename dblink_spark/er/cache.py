@@ -84,10 +84,10 @@ def build_records_cache(
         ),
     )
     tbl = stacked.groupBy("file_id", "attr", "value").count().toArrow()
-    fids = np.array(tbl.column("file_id").to_pylist(), dtype=object)
-    attr_ids = tbl.column("attr").to_numpy(zero_copy_only=False)
-    values = np.array(tbl.column("value").to_pylist(), dtype=object)
-    counts = tbl.column("count").to_numpy(zero_copy_only=False)
+    fids, attr_ids, values, counts = (
+        tbl.column(c).to_numpy(zero_copy_only=False)
+        for c in ("file_id", "attr", "value", "count")
+    )
     missing = tbl.column("value").is_null().to_numpy(zero_copy_only=False)
 
     # every record contributes exactly one row per attribute
